@@ -1877,8 +1877,9 @@ ORDER BY score DESC, doc_id LIMIT 10
 
 def q_edismax_qf_pruned(spark, sf_dir):
     """The SAME multi-field edismax request THROUGH THE BLOCK-MAX DISMAX
-    PRUNED PATH (round-5: wand.dismax_pruned — Lucene's BlockMaxScorer
-    over DisjunctionMaxQuery; bounds scaled by qf, residual folded with
+    PRUNED PATH (wand.block_max_topk with one block source per qf field —
+    Lucene's BlockMaxScorer over DisjunctionMaxQuery; bounds scaled by
+    qf, residual folded with
     the scorer's own max+tie combine, theta-refined pass 2, completeness
     check). Shares q_edismax_qf's DuckDB oracle: the pruned path must be
     EXACTLY the full path. full_cutover=0 + a tiny pool force the pruning

@@ -52,6 +52,9 @@ that AQE plans (broadcast when one side is tiny).
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+from functools import reduce
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -68,15 +71,13 @@ from ..functions.queryparser import (
     with_fuzzy_transpositions,
 )
 from .search import (
-    _DECODED_SCHEMA,
     Between,
     Index,
     _apply_boosts,
     _attach_excerpts,
     _blocks_for_terms,
+    _decode,
     _docs_with_any,
-    _make_decoder,
-    _payload_cols,
     _score_decoded,
     allowed_docs,
     phrase_scores,
@@ -434,10 +435,7 @@ def _scored_docs_raw(
     pos_terms = sorted(set(pq.should_terms) | set(pq.must_terms))
     term_piece_has_ns = False
     if pos_terms:
-        blocks = _blocks_for_terms(index, pos_terms)
-        decoded = blocks.select(*_payload_cols(blocks)).mapInPandas(
-            _make_decoder(index.avgdl), _DECODED_SCHEMA
-        )
+        decoded = _decode(_blocks_for_terms(index, pos_terms), index.avgdl)
         # clause boosts multiply the per-term contrib BEFORE the
         # deterministic fold — the SHARED _apply_boosts expression, so
         # this path, the WAND delegation, and the oracle use one float
@@ -549,10 +547,7 @@ def _scored_docs_raw(
         # match-any over repeated values, ascending-token fold, stable
         # docIDs align it with the main index's docs
         fidx = field_indexes[f]
-        fb = _blocks_for_terms(fidx, toks)
-        fdec = fb.select(*_payload_cols(fb)).mapInPandas(
-            _make_decoder(fidx.avgdl), _DECODED_SCHEMA
-        )
+        fdec = _decode(_blocks_for_terms(fidx, toks), fidx.avgdl)
         pieces.append(
             (True, _score_decoded(fdec).select("doc_id", "score"), False)
         )
@@ -881,7 +876,10 @@ def boolean_search(
     clauses, mm, match-all, and fq stay on the clause evaluator (their
     scoring genuinely precludes term upper bounds). ``mode`` only
     applies to delegable queries; the clause evaluator is always a full
-    evaluation."""
+    evaluation. ``now`` (Solr's ``NOW=``) anchors date math; without it
+    the wall clock is read ONCE, so q, every fq and the boosts share one
+    instant."""
+    now = now or datetime.now(timezone.utc)
     pq = parse_query(query, default_op=default_op, now=now)
     if fuzzy_transpositions:
         pq = with_fuzzy_transpositions(pq)
@@ -1202,28 +1200,25 @@ def _qf_union(
     fields: list[str],
     terms: list[str],
     qf: dict[str, float],
-    block_filter=None,
+    blocks_of=None,
     cand=None,
-) -> DataFrame | None:
+) -> DataFrame:
     """Per-field scaled-contrib rows ``(field, term, doc_id, fc)`` — the
     input both edismax_qf evaluation paths score. Each field decodes with
     its OWN avgdl (per-field similarities); ``fc = contrib * qf_f`` is the
     identical expression in both paths, so a candidate doc's rows here are
-    bit-equal whether or not pruning selected it. ``block_filter(f, blocks)``
-    restricts the block scan (pruned phase 3's doc-range + candidate
-    joins); ``cand`` (sorted int64 ids) filters inside the Arrow decoder.
-    Returns None when every field's scan was filtered away entirely."""
+    bit-equal whether or not pruning selected it. ``blocks_of(f)``
+    replaces field f's query-term block scan (pruned phase 3's doc-range +
+    candidate joins); ``cand`` (sorted int64 ids) filters inside the
+    Arrow decoder."""
     per_field = []
     for f in fields:
         idx = indexes[f]
-        blocks = _blocks_for_terms(idx, terms)
-        if block_filter is not None:
-            blocks = block_filter(f, blocks)
-            if blocks is None:
-                continue
-        dec = blocks.select(*_payload_cols(blocks)).mapInPandas(
-            _make_decoder(idx.avgdl, cand), _DECODED_SCHEMA
+        blocks = (
+            _blocks_for_terms(idx, terms) if blocks_of is None
+            else blocks_of(f)
         )
+        dec = _decode(blocks, idx.avgdl, cand)
         per_field.append(
             dec.select(
                 F.lit(f).alias("field"),
@@ -1232,12 +1227,7 @@ def _qf_union(
                 (F.col("contrib") * F.lit(float(qf[f]))).alias("fc"),
             )
         )
-    if not per_field:
-        return None
-    un = per_field[0]
-    for p in per_field[1:]:
-        un = un.unionByName(p)
-    return un
+    return reduce(DataFrame.unionByName, per_field)
 
 
 def _qf_score(un: DataFrame, tie: float) -> DataFrame:
@@ -1343,13 +1333,15 @@ def edismax_qf(
     single-field ``edismax_search``/``boolean_search`` surface.
 
     ``mode``: 'full' evaluates every term's complete postings in every
-    field; 'pruned' routes through block-max WAND over DisjunctionMax
-    (wand.dismax_pruned — Lucene's BlockMaxScorer over a DisMax query:
-    per-term bound = dismax-combine over fields of qf_f x field block
-    bound), rank-identical by construction (exact rescore + completeness
-    check with fallback); 'auto' picks pruned above the postings-volume
-    cutover. The pool/cutover/cap knobs pass through to dismax_pruned
-    (tests pin them to force branches)."""
+    field; 'pruned' runs the block-max engine (wand.block_max_topk —
+    Lucene's BlockMaxScorer over a DisMax query) with one block source
+    per qf field, bounds scaled by qf_f and folded per term by the same
+    max + tie combine the scorer uses; phase 3 rescores candidates
+    through ``_qf_union``/``_qf_score``, so it is rank-identical by
+    construction (exact rescore + completeness check with fallback);
+    'auto' picks pruned above the postings-volume cutover. The
+    pool/cutover/cap knobs pass through to the engine (tests pin them to
+    force branches)."""
     if not indexes or set(qf) - set(indexes):
         raise ValueError(
             f"qf fields {sorted(set(qf) - set(indexes))} have no index"
@@ -1385,24 +1377,32 @@ def edismax_qf(
 
     if mode not in ("auto", "full", "pruned"):
         raise ValueError(f"mode must be auto|full|pruned, got {mode!r}")
-    if mode != "full":
-        from .wand import dismax_pruned  # cycle-free
 
-        kw = {}
-        if pool_target is not None:
-            kw["pool_target"] = pool_target
-        if full_cutover is not None:
-            kw["full_cutover"] = full_cutover
-        if driver_meta_cap is not None:
-            kw["driver_meta_cap"] = driver_meta_cap
-        if driver_cand_cap is not None:
-            kw["driver_cand_cap"] = driver_cand_cap
-        return dismax_pruned(
-            indexes, fields, terms, qf, tie=tie, mm_n=mm_n, k=k,
-            meta_index=meta_index, with_meta=with_meta, **kw
+    def full():
+        return _qf_full(
+            indexes, fields, terms, qf, tie, mm_n, k, meta_index, with_meta
         )
-    return _qf_full(
-        indexes, fields, terms, qf, tie, mm_n, k, meta_index, with_meta
+
+    if mode == "full":
+        return full()
+    from .wand import _restrict_to, block_max_topk  # cycle-free
+
+    def rescore(blocks_of, cand):
+        un = _restrict_to(
+            lambda ids: _qf_union(
+                indexes, fields, terms, qf, blocks_of=blocks_of, cand=ids
+            ),
+            cand,
+        )
+        scored = _qf_score(un, tie)
+        return scored.filter(F.col("n_terms") >= mm_n) if mm_n > 0 else scored
+
+    return block_max_topk(
+        [(f, indexes[f], {t: float(qf[f]) for t in terms}) for f in fields],
+        terms, k, rescore=rescore, fallback=full, meta_index=meta_index,
+        with_meta=with_meta, tie=float(tie),
+        pool_target=pool_target, full_cutover=full_cutover,
+        driver_meta_cap=driver_meta_cap, driver_cand_cap=driver_cand_cap,
     )
 
 
@@ -1427,11 +1427,8 @@ def _resolve_facet_range(facet_range: tuple, now):
     fld, lo, hi, gap = facet_range
     if not (is_date_math(lo) or is_date_math(hi) or isinstance(gap, str)):
         return facet_range, None
-    from datetime import datetime, timezone
-
-    now_dt = now if now is not None else datetime.now(timezone.utc)
-    lo = parse_date_math(lo, now_dt) if isinstance(lo, str) else lo
-    hi = parse_date_math(hi, now_dt) if isinstance(hi, str) else hi
+    lo = parse_date_math(lo, now) if isinstance(lo, str) else lo
+    hi = parse_date_math(hi, now) if isinstance(hi, str) else hi
     if not isinstance(gap, str) or not gap.startswith("+"):
         raise ValueError(
             f"date facet.range needs a '+N<UNIT>' gap string, got {gap!r}"
@@ -1453,21 +1450,20 @@ def _resolve_facet_range(facet_range: tuple, now):
     return (fld, lo, hi, gap), edges
 
 
-def _cached_fq(index, caches, fq, default_op, field_indexes, now=None):
+def _cached_fq(index, caches, fq, default_op, field_indexes, anchor):
     """Route fq strings through a SearcherCaches filterCache when one is
     provided (Solr: every handler's fq hits the filterCache). Returns
-    (require_docset_or_None, remaining_fq) — with caches, ALL fq strings
-    become one intersected persisted doc set and remaining_fq is None."""
+    (require_docset_or_None, remaining_fq): with caches, every cacheable
+    fq string becomes part of one intersected persisted doc set; what
+    remains is the NOW-bearing fqs of an un-anchored request (``anchor``
+    None), which the caller evaluates at its request instant."""
     if caches is None or not fq:
         return None, fq
-    req = None
-    for s in [fq] if isinstance(fq, str) else list(fq):
-        ds = caches.filter_docset(
-            index, s, default_op=default_op, field_indexes=field_indexes,
-            now=now,
-        )
-        req = ds if req is None else req.join(ds, "doc_id", "left_semi")
-    return req, None
+    req, uncached = caches.filter_docsets(
+        index, [fq] if isinstance(fq, str) else list(fq),
+        default_op=default_op, field_indexes=field_indexes, now=anchor,
+    )
+    return req, uncached or None
 
 
 def select(
@@ -1570,6 +1566,7 @@ def select(
     path), and WAND-delegable ``q`` shapes get block-max pruning with
     ``mode='pruned'``. Anything needing the whole match set evaluates
     it once and derives every response section from it."""
+    anchor, now = now, now or datetime.now(timezone.utc)
     pq = parse_query(q, default_op=q_op, now=now)
     if facet_range_other is not None and facet_range is None:
         raise ValueError("facet_range_other requires facet_range")
@@ -1594,7 +1591,9 @@ def select(
             raise ValueError(f"q {q!r} parses to an empty query")
         # keep the pre-fl page: the highlighting section joins by doc_id,
         # which an fl projection may drop from the returned response
-        req, fq_eff = _cached_fq(index, caches, fq, q_op, field_indexes, now)
+        req, fq_eff = _cached_fq(
+            index, caches, fq, q_op, field_indexes, anchor
+        )
         page = boolean_search(
             index, q, k=start + rows, fq=fq_eff, default_op=q_op,
             mode=mode, with_meta=True, with_excerpt=hl,
@@ -1621,7 +1620,9 @@ def select(
     if scored is None:
         raise ValueError(f"q {q!r} parses to an empty query")
     if fq:
-        req, fq_eff = _cached_fq(index, caches, fq, q_op, field_indexes, now)
+        req, fq_eff = _cached_fq(
+            index, caches, fq, q_op, field_indexes, anchor
+        )
         if req is not None:
             scored = scored.join(req, "doc_id", "left_semi")
         if fq_eff:

@@ -44,6 +44,7 @@ searcher."""
 from __future__ import annotations
 
 import math
+import uuid
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -57,11 +58,18 @@ _MISSING = object()
 def _index_ident(ix):
     """Stable identity of a mapped field index for cache keys: its
     on-disk root (two Index objects over the same root ARE the same
-    filter domain — a reopened index must hit), falling back to object
-    identity for synthetic views without paths. ADVICE r5: field NAMES
-    alone let the same fq string under a different field_indexes wiring
-    with identical names return the wrong cached docset."""
-    return getattr(getattr(ix, "paths", None), "root", None) or id(ix)
+    filter domain — a reopened index must hit), falling back to a stamp
+    set on a synthetic view without paths on first sight. ADVICE r5:
+    field NAMES alone let the same fq string under a different
+    field_indexes wiring with identical names return the wrong cached
+    docset; a raw ``id()`` is recycled once its view is collected, so a
+    new view could hit a dead one's docset."""
+    root = getattr(getattr(ix, "paths", None), "root", None)
+    if root:
+        return root
+    if getattr(ix, "_cache_stamp", None) is None:
+        ix._cache_stamp = ("view", uuid.uuid4().hex)
+    return ix._cache_stamp
 
 
 def _fields_key(field_indexes):
@@ -77,22 +85,28 @@ def _resolve_now(now, *texts):
     a date-math query must key on its resolved instant (ADVICE r5: the
     old keys omitted it, serving the first resolution stale and ignoring
     a caller-anchored ``NOW=``). An anchored request keys on that
-    instant and hits across identical anchors; an un-anchored one keys
-    on the wall-clock instant it resolves — fresh per call, exactly
-    Solr, where un-rounded NOW queries are uncacheable by design (its
-    docs recommend ``NOW/DAY`` rounding for cacheability). Texts without
-    a NOW anchor keep a NOW-free key and full cacheability (the common
-    case; a literal term containing "NOW" conservatively degrades only
-    cacheability, never correctness). Returns ``(key_part, now)``."""
-    if not any(t and "NOW" in t for t in texts):
-        return None, now
+    instant and hits across identical anchors; an un-anchored one
+    resolves the wall clock and is NOT cacheable — its result is computed
+    but never inserted, exactly Solr, where un-rounded NOW queries are
+    uncacheable by design (its docs recommend ``NOW/DAY`` rounding for
+    cacheability); a fresh key per call would only evict useful entries.
+    Texts without a NOW anchor keep a NOW-free key and full cacheability
+    (the common case; a literal term containing "NOW" conservatively
+    degrades only cacheability, never correctness). Returns
+    ``(key_part, now, cacheable)``."""
+    if not _has_now(*texts):
+        return None, now, True
     from datetime import datetime, timezone
 
     if now is None:
-        now = datetime.now(timezone.utc)
-    elif now.tzinfo is None:
+        return None, datetime.now(timezone.utc), False
+    if now.tzinfo is None:
         now = now.replace(tzinfo=timezone.utc)
-    return now.isoformat(), now
+    return now.isoformat(), now, True
+
+
+def _has_now(*texts) -> bool:
+    return any(t and "NOW" in t for t in texts)
 
 
 class LRUCache:
@@ -196,11 +210,12 @@ class SearcherCaches:
         # IDENTITIES too: the same fq string under different
         # field_indexes wirings is a different filter query (Solr's key
         # is the parsed query object)
-        now_key, now = _resolve_now(now, fq)
+        now_key, now, cacheable = _resolve_now(now, fq)
         key = (fq, default_op, _fields_key(field_indexes), now_key)
-        hit = self.filter_cache.get(key)
-        if hit is not _MISSING:
-            return hit
+        if cacheable:
+            hit = self.filter_cache.get(key)
+            if hit is not _MISSING:
+                return hit
         from ..functions.queryparser import parse_query
         from .boolean import _scored_docs
 
@@ -210,9 +225,36 @@ class SearcherCaches:
         )
         if sub is None:
             raise ValueError(f"fq {fq!r} parses to an empty query")
+        if not cacheable:
+            return sub.select("doc_id")
         docset = sub.select("doc_id").persist(StorageLevel.MEMORY_AND_DISK)
         self.filter_cache.put(key, docset)
         return docset
+
+    def filter_docsets(
+        self, index, fqs, *, default_op: str = "OR",
+        field_indexes: dict | None = None, now=None,
+    ):
+        """A request's fq strings as ONE intersected doc set from the
+        filterCache, plus the fq strings it leaves to the caller: with an
+        un-anchored request (``now`` None) a NOW-bearing fq is not
+        cacheable, and the caller evaluates it against the request's own
+        instant — one NOW for q and every fq. Returns
+        ``(require_docset_or_None, uncached_fqs)``."""
+        require, uncached = None, []
+        for s in fqs:
+            if now is None and _has_now(s):
+                uncached.append(s)
+                continue
+            ds = self.filter_docset(
+                index, s, default_op=default_op,
+                field_indexes=field_indexes, now=now,
+            )
+            require = (
+                ds if require is None
+                else require.join(ds, "doc_id", "left_semi")
+            )
+        return require, uncached
 
     # -- documentCache ------------------------------------------------------
     def fetch_docs(self, index, ids: list[int]) -> dict:
@@ -261,30 +303,27 @@ class SearcherCaches:
         caching cannot apply (start+rows beyond queryResultMaxDocsCached).
         ``now`` anchors date math for the page AND every fq — ONE
         instant per request, Solr's model — and joins the page key when
-        any text carries a NOW anchor."""
+        any text carries a NOW anchor; an un-anchored NOW request is
+        answered without inserting into any cache."""
         from .boolean import boolean_search
         from .search import META_SCHEMA
 
         fqs = tuple([fq] if isinstance(fq, str) else list(fq or []))
-        now_key, now = _resolve_now(now, q, *fqs)
-        require = None
-        for s in fqs:
-            ds = self.filter_docset(
-                index, s, default_op=default_op, now=now
-            )
-            require = (
-                ds if require is None
-                else require.join(ds, "doc_id", "left_semi")
-            )
+        require, uncached = self.filter_docsets(
+            index, fqs, default_op=default_op, now=now
+        )
+        now_key, now, cacheable = _resolve_now(now, q, *fqs)
         if rows <= 0:
             return index.spark.createDataFrame([], META_SCHEMA)
         need = start + rows
-        if need > self.max_docs_cached:
+        if need > self.max_docs_cached or not cacheable:
             # Solr: pages beyond queryResultMaxDocsCached are never
-            # inserted — run the engine directly (fq still cached)
+            # inserted, nor are un-anchored NOW pages — run the engine
+            # directly (cacheable fqs still cached)
             return boolean_search(
                 index, q, k=need, mode=mode, default_op=default_op,
-                require=require, with_meta=True, now=now,
+                fq=uncached or None, require=require, with_meta=True,
+                now=now,
             ).offset(start)
         key = (q, fqs, mode, default_op, now_key)
         entry = self.query_result_cache.get(key)

@@ -15,7 +15,7 @@ and the document's score is the sum over its matching SHOULD/MUST terms
 DataFrame — the flattened Explanation rows Solr renders as nested JSON.
 
 Fidelity: the per-(doc, term) ``contrib`` values come from the SAME
-Arrow decoder the search path scores with (search._make_decoder — the
+Arrow decoder the search path scores with (search._decode — the
 canonical numpy expression in scoring.bm25_contrib), restricted to the
 top-k docs via its candidate filter, so the explanation is bit-identical
 to the score it explains rather than a re-derivation that could drift.
@@ -34,12 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import analyze_text
-from .search import (
-    _DECODED_SCHEMA,
-    _blocks_for_terms,
-    _make_decoder,
-    search,
-)
+from .search import _blocks_for_terms, _decode, search
 
 
 def explain(index, query: str, k: int = 10) -> DataFrame:
@@ -77,9 +72,7 @@ def explain(index, query: str, k: int = 10) -> DataFrame:
             }
         )
     )
-    decoded = _blocks_for_terms(index, terms).mapInPandas(
-        _make_decoder(index.avgdl, cand), _DECODED_SCHEMA
-    )
+    decoded = _decode(_blocks_for_terms(index, terms), index.avgdl, cand)
     stats = index.termstats.filter(F.col("term").isin(terms)).select(
         "term", "df", "idf"
     )

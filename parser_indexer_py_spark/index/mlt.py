@@ -13,8 +13,9 @@ the source document itself.
 Split of responsibilities: term SELECTION is driver-side pure Python over
 ONE document's tokens plus a |terms|-row termstats point lookup (shared
 with the oracle — selection is plumbing); result SCORING runs through the
-engine's block-max pruned path (``wand.search_pruned``, whose completeness
-check guarantees rank identity with full evaluation) and is gated by the
+engine's block-max pruned path (``wand.search_pruned``, the keyword
+strategy of the one block-max engine, whose completeness check guarantees
+rank identity with full evaluation) and is gated by the
 dual-implementation oracle.
 Selection scores are rounded to 6dp before ranking (ties then break on
 the term string) so the DuckDB driver oracle — whose ``ln`` is a

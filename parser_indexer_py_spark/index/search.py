@@ -124,54 +124,75 @@ def load_index(spark: SparkSession, root: str) -> Index:
     )
 
 
-def _make_decoder(avgdl: float, cand: "np.ndarray | None" = None):
-    """mapInPandas block decoder: blocks -> (term, doc_id, tf, contrib).
-    Contribs are computed HERE (numpy, canonical module) so they are
-    bit-identical to the oracle's — no JVM float arithmetic on the path.
-    If the input carries a ``base`` column (multi-segment search:
-    streaming/incremental.py), it is added to the decoded docIDs so
-    segment-local ids become global ids inside the Arrow batch.
+def _block_docs(pdf: pd.DataFrame) -> np.ndarray:
+    """GLOBAL doc ids of one Arrow batch of blocks: the docs_bin deltas,
+    plus the per-block ``base`` docID offset a multi-segment view
+    (streaming/merged.py) carries — segment-local ids become global ids
+    inside the batch."""
+    docs = np.concatenate(
+        [decode_deltas(b, n) for b, n in zip(pdf["docs_bin"], pdf["n"])]
+    ).astype(np.int64)
+    if "base" in pdf.columns:
+        docs += np.repeat(
+            pdf["base"].to_numpy(dtype=np.int64), pdf["n"].to_numpy()
+        )
+    return docs
+
+
+def _member(docs: np.ndarray, cand: np.ndarray) -> np.ndarray:
+    """Mask of ``docs`` present in the SORTED, non-empty id array
+    ``cand``."""
+    i = np.searchsorted(cand, docs)
+    return (i < len(cand)) & (cand[np.minimum(i, len(cand) - 1)] == docs)
+
+
+def _make_decoder(avgdl: float | None, cand: "np.ndarray | None" = None):
+    """mapInPandas block decoder (iterator of Arrow batches): blocks ->
+    ``(term, doc_id, tf, contrib)``, or bare ``doc_id`` when ``avgdl`` is
+    None — doc-SET consumers (candidate sets, constant-score and MUST_NOT
+    clauses, facet match sets) skip the tf/dl varint passes and the BM25
+    float work a ``.distinct()`` would discard. Contribs are computed HERE
+    (numpy, canonical module) so they are bit-identical to the oracle's —
+    no JVM float arithmetic on the path.
 
     ``cand`` (SORTED global doc ids) drops non-candidate entries inside
-    the batch — used by conjunctive evaluation when the rarest term is
-    selective (a doc lacking it can never reach n_terms == |terms|), the
-    same lossless filter the phrase path applies."""
+    the batch — pruned phase 3, the explain page, and conjunctive
+    evaluation when the rarest term is selective (a doc lacking it can
+    never reach n_terms == |terms|), the same lossless filter the phrase
+    path applies."""
 
     def decode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            docs = [decode_deltas(b, n) for b, n in zip(pdf["docs_bin"], pdf["n"])]
-            tfs = [decode_varint(b, n) for b, n in zip(pdf["tfs_bin"], pdf["n"])]
-            dls = [decode_varint(b, n) for b, n in zip(pdf["dls_bin"], pdf["n"])]
-            terms = np.repeat(pdf["term"].to_numpy(), pdf["n"].to_numpy())
-            idfs = np.repeat(
-                pdf["idf"].to_numpy(dtype=np.float64), pdf["n"].to_numpy()
-            )
-            doc_arr = np.concatenate(docs).astype(np.int64)
-            if "base" in pdf.columns:
-                doc_arr += np.repeat(
-                    pdf["base"].to_numpy(dtype=np.int64), pdf["n"].to_numpy()
-                )
-            tf_arr = np.concatenate(tfs).astype(np.int64)
-            dl_arr = np.concatenate(dls).astype(np.float64)
+            docs, keep = _block_docs(pdf), None
             if cand is not None:
-                i = np.searchsorted(cand, doc_arr)
-                keep = (i < len(cand)) & (
-                    cand[np.minimum(i, len(cand) - 1)] == doc_arr
-                )
+                keep = _member(docs, cand)
                 if not keep.any():
                     continue
-                terms, idfs = terms[keep], idfs[keep]
-                doc_arr, tf_arr, dl_arr = (
-                    doc_arr[keep], tf_arr[keep], dl_arr[keep]
+                docs = docs[keep]
+            if avgdl is None:
+                yield pd.DataFrame({"doc_id": docs})
+                continue
+            n = pdf["n"].to_numpy()
+            terms = np.repeat(pdf["term"].to_numpy(), n)
+            idfs = np.repeat(pdf["idf"].to_numpy(dtype=np.float64), n)
+            tfs = np.concatenate(
+                [decode_varint(b, m) for b, m in zip(pdf["tfs_bin"], n)]
+            ).astype(np.int64)
+            dls = np.concatenate(
+                [decode_varint(b, m) for b, m in zip(pdf["dls_bin"], n)]
+            ).astype(np.float64)
+            if keep is not None:
+                terms, idfs, tfs, dls = (
+                    terms[keep], idfs[keep], tfs[keep], dls[keep]
                 )
-            contrib = bm25_contrib(tf_arr, dl_arr, 1.0, avgdl) * idfs
+            contrib = bm25_contrib(tfs, dls, 1.0, avgdl) * idfs
             yield pd.DataFrame(
                 {
                     "term": terms,
-                    "doc_id": doc_arr,
-                    "tf": tf_arr.astype(np.int32),
+                    "doc_id": docs,
+                    "tf": tfs.astype(np.int32),
                     "contrib": contrib,
                 }
             )
@@ -179,28 +200,22 @@ def _make_decoder(avgdl: float, cand: "np.ndarray | None" = None):
     return decode
 
 
-def _make_docs_decoder():
-    """Docs-only block decoder for doc-SET consumers (phrase candidate
-    pruning, constant-score prefix queries, MUST_NOT exclusions): decodes
-    ONLY docs_bin — skips the tf/dl varint passes and the BM25 float work
-    ``_make_decoder`` does, all of which a ``.distinct()`` would discard."""
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            docs = [
-                decode_deltas(b, n) for b, n in zip(pdf["docs_bin"], pdf["n"])
-            ]
-            doc_arr = np.concatenate(docs).astype(np.int64)
-            if "base" in pdf.columns:
-                doc_arr += np.repeat(
-                    pdf["base"].to_numpy(dtype=np.int64),
-                    pdf["n"].to_numpy(),
-                )
-            yield pd.DataFrame({"doc_id": doc_arr})
-
-    return decode
+def _decode(
+    blocks: DataFrame,
+    avgdl: float | None = None,
+    cand: "np.ndarray | None" = None,
+) -> DataFrame:
+    """Decode postings ``blocks`` through :func:`_make_decoder`: scored
+    ``(term, doc_id, tf, contrib)`` rows with ``avgdl``, ``doc_id`` rows
+    without it. Projects only the payload the decoder reads."""
+    if avgdl is None:
+        cols, schema = ["n", "docs_bin"], "doc_id long"
+    else:
+        cols = ["term", "n", "idf", "docs_bin", "tfs_bin", "dls_bin"]
+        schema = _DECODED_SCHEMA
+    if "base" in blocks.columns:
+        cols.append("base")
+    return blocks.select(*cols).mapInPandas(_make_decoder(avgdl, cand), schema)
 
 
 def _docs_with_any(index: "Index", terms: list[str]) -> DataFrame:
@@ -208,14 +223,7 @@ def _docs_with_any(index: "Index", terms: list[str]) -> DataFrame:
     only those terms' blocks)."""
     if not terms:
         return index.spark.createDataFrame([], "doc_id long")
-    blocks = _blocks_for_terms(index, terms)
-    cols = ["n", "docs_bin"] + (["base"] if "base" in blocks.columns else [])
-    return (
-        blocks.select(*cols)
-        .mapInPandas(_make_docs_decoder(), "doc_id long")
-        .distinct()
-    )
-
+    return _decode(_blocks_for_terms(index, terms)).distinct()
 
 
 def _apply_boosts(decoded: DataFrame, terms: list[str], boost_of) -> DataFrame:
@@ -239,8 +247,8 @@ _POS_DECODED_SCHEMA = "term string, doc_id long, dl long, positions array<int>"
 def _make_pos_decoder(cand: "np.ndarray | None" = None):
     """mapInPandas block decoder for the PHRASE path: blocks (with
     positional payload) -> one row per posting entry carrying that entry's
-    absolute token-position list. Optional ``base`` column (multi-segment
-    search) offsets docIDs exactly like :func:`_make_decoder`.
+    absolute token-position list. Doc ids and the ``cand`` membership
+    test are the flat decoder's (:func:`_block_docs`, :func:`_member`).
 
     ``cand`` (SORTED global doc ids) filters emitted entries to candidate
     docs INSIDE the Arrow batch — a phrase doc must contain the rarest
@@ -254,14 +262,15 @@ def _make_pos_decoder(cand: "np.ndarray | None" = None):
             if not len(pdf):
                 continue
             out_term, out_doc, out_dl, out_pos = [], [], [], []
-            bases = (
-                pdf["base"].to_numpy(dtype=np.int64)
-                if "base" in pdf.columns
-                else np.zeros(len(pdf), dtype=np.int64)
-            )
-            for row, base in zip(pdf.itertuples(index=False), bases):
+            batch_docs = _block_docs(pdf)
+            batch_keep = None if cand is None else _member(batch_docs, cand)
+            ends = np.cumsum(pdf["n"].to_numpy())
+            for row, end in zip(pdf.itertuples(index=False), ends):
                 n = int(row.n)
-                docs = decode_deltas(row.docs_bin, n).astype(np.int64) + base
+                docs = batch_docs[end - n:end]
+                keep = None if batch_keep is None else batch_keep[end - n:end]
+                if keep is not None and not keep.any():
+                    continue
                 tfs = decode_varint(row.tfs_bin, n).astype(np.int64)
                 dls = decode_varint(row.dls_bin, n).astype(np.int64)
                 occ_starts = np.zeros(n, dtype=np.int64)
@@ -270,11 +279,7 @@ def _make_pos_decoder(cand: "np.ndarray | None" = None):
                     row.pos_bin, int(tfs.sum()), occ_starts
                 ).astype(np.int32)
                 plists = np.split(pos, occ_starts[1:])
-                if cand is not None:
-                    i = np.searchsorted(cand, docs)
-                    keep = (i < len(cand)) & (cand[np.minimum(i, len(cand) - 1)] == docs)
-                    if not keep.any():
-                        continue
+                if keep is not None:
                     docs, dls = docs[keep], dls[keep]
                     plists = [p for p, k in zip(plists, keep) if k]
                     n = int(keep.sum())
@@ -448,7 +453,9 @@ def phrase_scores(
                 "left_semi",
             )
         blocks = blocks.filter(F.col("term") == rare).unionByName(others)
-    cols = [c for c in _payload_cols(blocks, "pos_bin") if c != "idf"]
+    cols = ["term", "n", "docs_bin", "tfs_bin", "dls_bin", "pos_bin"]
+    if "base" in blocks.columns:
+        cols.append("base")
     decoded = blocks.select(*cols).mapInPandas(
         _make_pos_decoder(cand_arr), _POS_DECODED_SCHEMA
     )
@@ -654,16 +661,6 @@ def _blocks_for_terms(index: Index, terms: list[str]) -> DataFrame:
     return index.postings.filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(terms)
     )
-
-
-def _payload_cols(blocks: DataFrame, *extra: str) -> list[str]:
-    """Columns the Arrow block decoders need. A multi-segment view
-    (streaming/merged.py) carries an extra per-block ``base`` docID offset —
-    include it whenever present so decoded docIDs come out global."""
-    cols = ["term", "n", "idf", "docs_bin", "tfs_bin", "dls_bin", *extra]
-    if "base" in blocks.columns:
-        cols.append("base")
-    return cols
 
 
 def search(
@@ -889,9 +886,7 @@ def full_eval(
                     )
                 else:
                     cand_arr = None
-    decoded = blocks.select(*_payload_cols(blocks)).mapInPandas(
-        _make_decoder(index.avgdl, cand_arr), _DECODED_SCHEMA
-    )
+    decoded = _decode(blocks, index.avgdl, cand_arr)
     if boosts:
         decoded = _apply_boosts(decoded, terms, lambda t: boosts.get(t, 1.0))
     use_groups = conjunctive and groups is not None
@@ -978,15 +973,9 @@ def facet_counts(
     terms = sorted(set(analyze_text(query)))
     if not terms:
         return index.spark.createDataFrame([], f"{field} string, n long")
-    blocks = _blocks_for_terms(index, terms)
-    matching = (
-        blocks.select(*_payload_cols(blocks))
-        .mapInPandas(_make_decoder(index.avgdl), _DECODED_SCHEMA)
-        .select("doc_id")
-        .distinct()
-    )
     return (
-        matching.join(index.docmap.select("doc_id", field), "doc_id")
+        _docs_with_any(index, terms)
+        .join(index.docmap.select("doc_id", field), "doc_id")
         .groupBy(field)
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc(field))

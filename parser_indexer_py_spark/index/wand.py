@@ -1,40 +1,68 @@
-"""Block-max pruned top-k (batch-form block-max WAND / MaxScore).
+"""Block-max pruned top-k: ONE batch block-max WAND engine, two strategies.
 
 Doc-at-a-time WAND doesn't map onto DataFrames; the equivalent batch
 formulation here keeps its essential property — skip postings blocks that
 cannot influence the top-k — while remaining PROVABLY rank-identical to the
-full-evaluation path (SURVEY.md §4.2 "block-max WAND" row):
+full-evaluation path (SURVEY.md §4.2 "block-max WAND" row). Lucene runs one
+block-max scorer whether the query is a BooleanQuery or a
+DisjunctionMaxQuery; so does this module. :func:`block_max_topk` is the
+engine; a strategy hands it three things:
 
-Phase 0  (driver): collect block metadata for the query terms — (term,
-         block_id, n, block_max_score). This is the "broadcast segment
-         metadata" walk of SURVEY.md §3.3; bytes ~ df/128 rows per term.
-Phase 1  (selection): take blocks in descending block_max_score order until
-         the candidate pool holds >= max(8k, 4k·|terms|) postings; tau =
-         last taken bound. R = sum over terms of the max bound among
-         *pruned* blocks: no doc outside the candidate set can score > R.
-Phase 2  (Spark): decode ONLY selected blocks -> candidate docIDs (collected:
-         O(pool) ids).
-Phase 3  (Spark): decode the query terms' blocks again but keep only
-         candidate docs inside the Arrow decoder (np.isin before the explode)
-         -> exact scores for candidates via the same deterministic fold ->
-         top-k.
+- **sources** — one ``(field, index, scale)`` per block list family, where
+  ``scale`` maps each term to the factor its block bounds are multiplied
+  by (``sbound = scale[t] x block_max_score``). Keyword search
+  (:func:`search_pruned`) is the ONE-field case, scaled by each term's
+  clause boost (1.0 unboosted — exact, so selection, tau and R are the
+  plain block bounds). DisMax (``boolean.edismax_qf``) has one source per
+  qf field, scaled by qf_f.
+- **rescore(blocks_of, cand)** — phase 3: exact scores for the
+  candidates, through the SAME folds the strategy's full evaluation runs
+  (keyword: ``_apply_boosts`` -> ``_score_decoded`` + containment /
+  conjunctive / min_match / fq filters; DisMax: ``_qf_union`` ->
+  ``_qf_score`` + mm), so candidate scores are bit-identical to it.
+- **fallback()** — that full evaluation itself.
+
+Phases, over the normalized block metadata (field, term, seg, block_id, n,
+sbound), seg = -1 for a monolithic index:
+
+Phase 0  (driver): termstats -> adaptive full/pruned cutover.
+Phase 1  (selection): take blocks in descending sbound order until the
+         candidate pool holds >= pool_target postings, plus every
+         (field, term) list's top blocks (driver-exact below the meta cap,
+         approx-quantile tau above it). r(t, f) = best PRUNED sbound of
+         list (t, f) (0 when nothing of it was pruned: a non-candidate doc
+         then has no posting there). Per term, the DisMax combine
+
+             bound_t = max_f r + tie * (sum_f r - max_f r)
+
+         (with one field bound_t = r), and R = sum_t bound_t. A doc outside
+         the candidate set has all its postings in pruned blocks, so its
+         score is <= R.
+Phase 2  (Spark): decode ONLY the selected blocks' doc ids -> distinct
+         candidate docIDs (O(pool) ids).
+Phase 3  (Spark): ``rescore`` decodes the query terms' blocks again, keeping
+         only candidate docs -> exact candidate scores -> top-k.
 Check    theta_k (k-th returned score, after any structured filter) > R,
          and the result has k rows (or R == 0, i.e. nothing was pruned).
-Pass 2   (round 5) if the check fails, the k-th exact score theta from
-         pass 1 is a LOWER bound on the true theta_k — re-select every
-         block with bound >= theta/|terms| (union the pass-1 selection)
-         and re-run phases 2-3: now every pruned block's bound is
-         < theta/|terms|, so R2 < theta <= theta_k and completeness is
-         guaranteed by construction (the batch analog of doc-at-a-time
-         WAND's theta refinement). Economic guards route shapes that
-         cannot win to full evaluation instead: selection > 50% of total
-         postings (flat corpora), candidates > ~10% of postings
-         (CAND_FRAC_GUARD — scattered-candidate rescores cost as much as
-         full on any architecture), and the per-candidate block-range
-         nested loop is skipped above BNL_CELL_CAP cells. Only via those
-         guards (or pass 1 producing < k rows) does the call FALL BACK —
-         either way the pruned path can never return a different answer
-         than the oracle path.
+Pass 2   if the check fails, the k-th exact score theta from pass 1 is a
+         LOWER bound on the true theta_k — re-select every block with
+
+             sbound >= theta / (|terms| * (1 + tie * (|fields| - 1)))
+
+         (theta/|terms| with one field; union the pass-1 selection) and
+         re-run phases 2-3: every pruned list then has r < that threshold,
+         so bound_t <= (1 + tie * (|fields| - 1)) * max_f r < theta/|terms|
+         and R2 < theta <= theta_k — completeness is guaranteed by
+         construction (the batch analog of doc-at-a-time WAND's theta
+         refinement). Economic guards route shapes that cannot win to full
+         evaluation instead: selection > 50% of total postings (flat
+         corpora), candidates > ~10% of postings (CAND_FRAC_GUARD —
+         scattered-candidate rescores cost as much as full on any
+         architecture), and the per-candidate block-range nested loop is
+         skipped above BNL_CELL_CAP cells. Only via those guards (or pass 1
+         producing < k rows) does the call FALL BACK — either way the
+         pruned path can never return a different answer than the oracle
+         path.
 
 Why this wins at scale: the shuffle/aggregation volume drops from "every
 posting of every query term" (hot terms: O(N) rows) to "candidate pool"
@@ -46,60 +74,12 @@ of magnitude.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.varint import decode_deltas, decode_varint
-from .scoring import bm25_contrib
-
-_DECODED_SCHEMA = "term string, doc_id long, tf int, contrib double"
-
-
-def _make_filtered_decoder(avgdl: float, keep_docs: np.ndarray | None):
-    keep = None if keep_docs is None else np.asarray(keep_docs, dtype=np.int64)
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            docs = np.concatenate(
-                [decode_deltas(b, n) for b, n in zip(pdf["docs_bin"], pdf["n"])]
-            ).astype(np.int64)
-            tfs = np.concatenate(
-                [decode_varint(b, n) for b, n in zip(pdf["tfs_bin"], pdf["n"])]
-            ).astype(np.int64)
-            dls = np.concatenate(
-                [decode_varint(b, n) for b, n in zip(pdf["dls_bin"], pdf["n"])]
-            ).astype(np.float64)
-            terms = np.repeat(pdf["term"].to_numpy(), pdf["n"].to_numpy())
-            idfs = np.repeat(
-                pdf["idf"].to_numpy(dtype=np.float64), pdf["n"].to_numpy()
-            )
-            if "base" in pdf.columns:  # multi-segment view: globalize ids
-                docs = docs + np.repeat(
-                    pdf["base"].to_numpy(dtype=np.int64), pdf["n"].to_numpy()
-                )
-            if keep is not None:
-                m = np.isin(docs, keep)
-                docs, tfs, dls, terms, idfs = (
-                    docs[m], tfs[m], dls[m], terms[m], idfs[m],
-                )
-            if not len(docs):
-                continue
-            contrib = bm25_contrib(tfs, dls, 1.0, avgdl) * idfs
-            yield pd.DataFrame(
-                {
-                    "term": terms,
-                    "doc_id": docs,
-                    "tf": tfs.astype(np.int32),
-                    "contrib": contrib,
-                }
-            )
-
-    return decode
-
 
 # Below this many total query-term postings, full evaluation beats pruning:
 # the decode is a handful of columnar partitions and one narrow shuffle,
@@ -196,6 +176,392 @@ def _apply_block_selection(spark, blocks, selected, seg_aware: bool):
     return blocks.join(F.broadcast(sel_keys), key_cols, "left_semi")
 
 
+def _scaled_bound(scale: dict):
+    """``block_max_score`` x the source's per-term bound scale, as a
+    column (the plain column when every scale is 1.0: no multiply, so an
+    unboosted keyword query keeps its pushable block-bound predicate)."""
+    col = F.col("block_max_score")
+    if set(scale.values()) == {1.0}:
+        return col
+    smap = F.create_map(
+        *[x for t, s in scale.items() for x in (F.lit(t), F.lit(s))]
+    )
+    return col * smap[F.col("term")]
+
+
+def _residual_bound(r_tf: pd.Series, tie: float) -> float:
+    """R from the best pruned bound of each (term, field) list: the DisMax
+    combine per term, summed over terms (one field: the sum of r_t)."""
+    if not len(r_tf):
+        return 0.0
+    by_term = r_tf.groupby(level="term")
+    mx, sm = by_term.max(), by_term.sum()
+    return float((mx + tie * (sm - mx)).sum())
+
+
+def _restrict_to(decode, cand):
+    """``decode(ids)`` kept to the phase-3 candidates: a sorted id array
+    (driver handoff) filters inside the Arrow decoder; a candidate
+    DataFrame (distributed handoff) semi-joins after decode, before the
+    groupBy shuffle — which still shrinks to candidate volume. NO
+    broadcast hint there: a broadcast would collect the whole over-cap set
+    on the driver, the exact blowup that handoff exists to avoid."""
+    if isinstance(cand, np.ndarray):
+        return decode(cand)
+    return decode(None).join(cand, "doc_id", "left_semi")
+
+
+def block_max_topk(
+    sources: list,
+    terms: list[str],
+    k: int,
+    *,
+    rescore,
+    fallback,
+    meta_index,
+    with_meta: bool,
+    tie: float = 0.0,
+    require: DataFrame | None = None,
+    exclude: DataFrame | None = None,
+    pool_target: int | None = None,
+    full_cutover: int | None = None,
+    driver_meta_cap: int | None = None,
+    driver_cand_cap: int | None = None,
+) -> DataFrame:
+    """The block-max engine (module docstring): ``sources`` is a list of
+    ``(field, index, {term: bound scale})``; ``rescore(blocks_of, cand)``
+    returns the candidates' exact ``(doc_id, score)`` DataFrame, where
+    ``blocks_of(field)`` is that field's query-term block scan restricted
+    to blocks that can hold a candidate and ``cand`` is a sorted id array
+    or a candidate DataFrame (see :func:`_restrict_to`); ``fallback()`` is
+    the full evaluation.
+    ``require``/``exclude`` are score-neutral doc-set joins applied to the
+    phase-2 candidate set — a doc failing them can never be a result, so
+    the joins are lossless and phase 3 decodes strictly fewer candidates.
+
+    ``pool_target`` overrides the candidate-pool size (tests use a tiny
+    pool to force the completeness check to fail), ``full_cutover`` the
+    postings-volume pruned/full switch (tests pin it to 0 to force the
+    pruned machinery on small corpora), ``driver_meta_cap`` /
+    ``driver_cand_cap`` the driver-vs-distributed selection and handoff
+    bounds. Seg-awareness is detected per field, so monolithic and
+    segmented (MergedSegmentsView) indexes can mix."""
+    from .search import META_SCHEMA, SCORE_SCHEMA, _blocks_for_terms, _decode
+
+    spark = meta_index.spark
+    fields = [f for f, _, _ in sources]
+    if driver_meta_cap is None:
+        driver_meta_cap = DRIVER_META_ROW_CAP
+    if driver_cand_cap is None:
+        driver_cand_cap = DRIVER_CAND_CAP
+
+    def _empty():
+        # schema contract: an empty result must carry the SAME columns a
+        # non-empty call returns (a caller selecting conv_id must not
+        # crash — reachable from select's fast path on an OOV query)
+        return spark.createDataFrame(
+            [], META_SCHEMA if with_meta else SCORE_SCHEMA
+        )
+
+    def _fallback(counter: str = "fallback"):
+        PRUNE_STATS[counter] += 1
+        return fallback()
+
+    # ---- phase 0: adaptive cutover from termstats (|terms| rows per field)
+    cutover = FULL_CUTOVER_POSTINGS if full_cutover is None else full_cutover
+    st = reduce(DataFrame.unionByName, [
+        idx.termstats.filter(F.col("term").isin(terms)).select("df")
+        for _, idx, _ in sources
+    ])
+    total_postings = int(sum(int(r["df"]) for r in st.collect()))
+    if total_postings == 0:
+        return _empty()
+    if total_postings <= cutover:
+        return _fallback("cutover")
+
+    if pool_target is None:
+        # measured at 6.5M docs: the old max(8k, 4k|q|) pool left the
+        # residual bound R above theta_k (R is the SUM over terms of the
+        # best pruned bound, so a rare high-idf term's unselected blocks
+        # dominate it) — every query silently fell back to full
+        # evaluation. 64k/16k|q| postings is still ~1e-5 of a hot term.
+        pool_target = max(64 * k, 16 * k * len(terms))
+    n_lists = len(terms) * len(fields)
+    est_meta_rows = total_postings // 128 + n_lists
+
+    # normalized bound metadata; narrow projection — the payload columns
+    # never reach these scans. A multi-segment view repeats block_id per
+    # segment, so selection keys carry seg (term, block_id alone would
+    # select a superset: harmless for correctness, wasteful at scale)
+    blocks = {f: _blocks_for_terms(idx, terms) for f, idx, _ in sources}
+    sbound = {f: _scaled_bound(scale) for f, _, scale in sources}
+    bmeta = reduce(DataFrame.unionByName, [
+        blocks[f].select(
+            F.lit(f).alias("field"),
+            "term",
+            (
+                F.col("seg") if "seg" in blocks[f].columns else F.lit(-1)
+            ).alias("seg"),
+            "block_id",
+            "n",
+            sbound[f].alias("sbound"),
+        )
+        for f in fields
+    ])
+
+    def _driver_pick(idx):
+        """(selected_blocks(field), R) for the driver-chosen meta rows."""
+        chosen = meta.loc[idx]
+        pruned = meta.drop(index=idx)
+        r_tf = pruned.groupby(["term", "field"])["sbound"].max()
+
+        def selected_blocks(f):
+            return _apply_block_selection(
+                spark, blocks[f], chosen[chosen["field"] == f],
+                "seg" in blocks[f].columns,
+            )
+
+        return selected_blocks, _residual_bound(r_tf, tie)
+
+    def _selected_n(t) -> int:
+        return int(
+            bmeta.filter(F.col("sbound") >= t).agg(F.sum("n").alias("s"))
+            .collect()[0]["s"] or 0
+        )
+
+    def _dist_pick(t):
+        """(selected_blocks(field), R) for the distributed selection
+        sbound >= t; the driver sees only |terms| x |fields| maxima."""
+        rows = (
+            bmeta.filter(F.col("sbound") < t)
+            .groupBy("term", "field")
+            .agg(F.max("sbound").alias("m"))
+            .collect()
+        )
+        r_tf = pd.DataFrame(rows, columns=["term", "field", "m"]).set_index(
+            ["term", "field"]
+        )["m"]
+        return (
+            lambda f: blocks[f].filter(sbound[f] >= t),
+            _residual_bound(r_tf, tie),
+        )
+
+    def _finish(scored, R):
+        """Top-k collect + completeness check: (top_rows, complete)."""
+        top = (
+            scored.select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
+            .collect()
+        )
+        return top, R == 0.0 or (len(top) == k and top[-1]["score"] > R)
+
+    def _driver_handoff(candidates):
+        """Phase 3 over a sorted driver candidate array: decode ONLY blocks
+        whose [doc_min, doc_max] range can contain a candidate (every
+        posting of a candidate doc lives in such a block, so this prunes
+        no needed data) — coarse PUSHED bounds first (row-group min/max
+        skipping on the scan), then the exact per-candidate block-range
+        semi-join (BroadcastNestedLoop over block METADATA rows, before
+        any payload transfer — round-2 scale-up measured phase 3 decoding
+        everything and losing to full evaluation) when the nested loop is
+        small (see BNL_CELL_CAP), plus the in-decoder membership filter."""
+        rng = (F.col("doc_max") >= int(candidates[0])) & (
+            F.col("doc_min") <= int(candidates[-1])
+        )
+        if len(candidates) * est_meta_rows > BNL_CELL_CAP:
+            return rescore(lambda f: blocks[f].filter(rng), candidates)
+        # Arrow-backed: a row-by-row tuple list costs ~100x the numpy
+        # array's 8 MB at the 1M cap (round-4 ADVICE); a pandas frame
+        # ships as Arrow batches, no per-row objects
+        cand_df = spark.createDataFrame(pd.DataFrame({"cand": candidates}))
+        within = (F.col("cand") >= F.col("doc_min")) & (
+            F.col("cand") <= F.col("doc_max")
+        )
+        return rescore(
+            lambda f: blocks[f].filter(rng).join(
+                F.broadcast(cand_df), within, "left_semi"
+            ),
+            candidates,
+        )
+
+    def _evaluate(selected_blocks, R):
+        """Phases 2-3 for ONE block selection; (top_rows, complete)."""
+        selected = [
+            b for b in (selected_blocks(f) for f in fields) if b is not None
+        ]
+        if not selected:
+            return None, False
+        # phase 2: candidate docIDs from the selected blocks (ids only)
+        cand_set = reduce(
+            DataFrame.unionByName, [_decode(b) for b in selected]
+        ).distinct()
+        if require is not None:
+            cand_set = cand_set.join(require, "doc_id", "left_semi")
+        if exclude is not None:
+            cand_set = cand_set.join(exclude, "doc_id", "left_anti")
+        guard_cap = int(max(k * 64, CAND_FRAC_GUARD * total_postings))
+        if guard_cap <= driver_cand_cap:
+            # FUSED fast path: the economic guard already bounds any
+            # survivable candidate set at guard_cap (<= the driver handoff
+            # cap), so ONE bounded limit+toPandas both materializes the set
+            # and decides the guard — replacing the persist + count/bounds
+            # agg job + separate toPandas job (two driver round-trips and a
+            # cache write) of the general path below. Ids are 8 B each:
+            # the fetch is <= ~8 MB, the established driver comfort bound.
+            pdf = cand_set.limit(guard_cap + 1).toPandas()
+            if not len(pdf):
+                return None, False
+            if len(pdf) > guard_cap:
+                raise _TooManyCandidates(len(pdf))
+            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+            return _finish(_driver_handoff(np.sort(ids)), R)
+        # general path: the guard bound exceeds the driver handoff cap
+        # (total_postings > 10 * driver_cand_cap), so the candidate set
+        # must stay distributed until its size is known
+        cand_set = cand_set.persist()
+        try:
+            cstats = cand_set.agg(
+                F.count("*").alias("n"),
+                F.min("doc_id").alias("lo"),
+                F.max("doc_id").alias("hi"),
+            ).collect()[0]
+            n_cand = int(cstats["n"] or 0)
+            if n_cand == 0:
+                return None, False
+            if n_cand > guard_cap:
+                raise _TooManyCandidates(n_cand)
+            if n_cand <= driver_cand_cap:
+                ids = cand_set.toPandas()["doc_id"].to_numpy(dtype=np.int64)
+                scored = _driver_handoff(np.sort(ids))
+            else:
+                # DISTRIBUTED handoff (no driver candidate array, no
+                # collect between phases): the nested-loop range join
+                # would cost O(meta_rows x n_cand), and huge candidate sets
+                # hit ~every block anyway (same measurement as the phrase
+                # path's PHRASE_BLOCK_JOIN_CAP), so keep only the coarse
+                # bound
+                rng = (F.col("doc_max") >= int(cstats["lo"])) & (
+                    F.col("doc_min") <= int(cstats["hi"])
+                )
+                scored = rescore(lambda f: blocks[f].filter(rng), cand_set)
+            # _finish collects inside this try block, while the persisted
+            # candidate set (referenced by the distributed-handoff plan)
+            # is still materialized
+            return _finish(scored, R)
+        finally:
+            cand_set.unpersist()
+
+    driver_selection = est_meta_rows <= driver_meta_cap
+    if driver_selection:
+        # ---- phase 1a: exact block selection on the driver ----------------
+        meta = bmeta.toPandas()
+        if not len(meta):
+            return _empty()
+        meta = meta.sort_values(
+            ["sbound", "field", "term", "seg", "block_id"],
+            ascending=[False, True, True, True, True],
+        ).reset_index(drop=True)
+        cum = meta["n"].cumsum()
+        take = int(np.searchsorted(cum.to_numpy(), pool_target, side="left")) + 1
+        take = min(take, len(meta))
+        # per-list floor: R is driven by each (term, field) list's best
+        # PRUNED bound, so global by-score selection alone lets one list's
+        # untouched top blocks keep R high; always take every list's top
+        # blocks as well
+        per_list = max(2, int(np.ceil(pool_target / (128.0 * n_lists))))
+        sel_idx = np.union1d(
+            np.arange(take),
+            meta.groupby(["field", "term"], sort=False)
+            .head(per_list)
+            .index.to_numpy(),
+        )
+        pick = _driver_pick(sel_idx)
+    else:
+        # ---- phase 1b: DISTRIBUTED block selection (driver sees O(1) rows)
+        # tau = approximate sbound quantile such that ~pool_target
+        # postings' worth of blocks clear it (blocks are fixed-size, so the
+        # block-count quantile tracks the postings-weighted one). The
+        # relativeError is a RANK-fraction error, so it must scale with the
+        # target fraction — a fixed 0.01 would let tau admit ~1% of ALL
+        # blocks (10^7 postings for a 10^9-df term), re-creating the driver
+        # blowup this branch exists to prevent. Greenwald-Khanna memory
+        # grows as O(1/err log(err*n)); err >= 1e-6 keeps it bounded, and
+        # the volume guard below catches any remaining overshoot.
+        frac = min(1.0, pool_target / float(total_postings))
+        err = max(1e-6, min(0.01, frac / 2.0))
+        tau = bmeta.stat.approxQuantile("sbound", [max(0.0, 1.0 - frac)], err)[0]
+        # volume guard: if ties at tau (or quantile error) still selected
+        # far more than the pool target, pruning wouldn't pay — evaluate
+        # fully rather than collect an oversized candidate set
+        if _selected_n(tau) > max(50 * pool_target, 100_000):
+            return _fallback()
+        pick = _dist_pick(tau)
+
+    try:
+        top, complete = _evaluate(*pick)
+    except _TooManyCandidates:
+        return _fallback()
+    if complete:
+        PRUNE_STATS["pass1"] += 1
+    else:
+        # ---- pass 2: theta-refined selection (module docstring) -----------
+        # Pass 1's k-th exact score theta is a LOWER bound on the true
+        # theta_k (its docs are real, their scores exact); pass-1
+        # candidates stay a subset of pass 2's under the same filters. The
+        # volume guard routes genuinely flat/saturated queries to full
+        # evaluation, which is the honest optimum there.
+        if top is None or len(top) < k or float(top[-1]["score"]) <= 0.0:
+            return _fallback()
+        thresh = float(top[-1]["score"]) / (
+            float(len(terms)) * (1.0 + float(tie) * (len(fields) - 1))
+        )
+        if driver_selection:
+            sel2_idx = np.union1d(
+                sel_idx,
+                meta.index.to_numpy()[meta["sbound"].to_numpy() >= thresh],
+            )
+            if len(sel2_idx) == len(sel_idx):
+                # threshold admitted no new blocks: pass 2 would re-run
+                # pass 1's exact evaluation and fail the same check
+                return _fallback()
+            if int(meta.loc[sel2_idx, "n"].sum()) > 0.5 * total_postings:
+                return _fallback()
+            pick = _driver_pick(sel2_idx)
+        else:
+            # min(tau, thresh) keeps the pass-1 selection a subset (the
+            # theta >= theta_k(pass 2) argument needs pass-1 candidates to
+            # remain candidates)
+            t2 = min(tau, thresh)
+            if t2 >= tau:
+                # same tau => same selection => same failed check
+                return _fallback()
+            if _selected_n(t2) > 0.5 * total_postings:
+                return _fallback()
+            pick = _dist_pick(t2)
+        try:
+            top, complete = _evaluate(*pick)
+        except _TooManyCandidates:
+            return _fallback()
+        if not complete:
+            return _fallback()
+        PRUNE_STATS["pass2"] += 1
+
+    if not top:
+        # the pruned evaluation itself can complete with zero survivors
+        # (R == 0 and the exclude/containment/mm filters emptied the
+        # candidates) — the schema contract still applies (round-4
+        # review, second pass)
+        return _empty()
+    out = spark.createDataFrame(
+        [(r["doc_id"], r["score"]) for r in top], SCORE_SCHEMA
+    )
+    if with_meta:
+        m = meta_index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
+        out = out.join(m, "doc_id", "left").orderBy(F.desc("score"), F.asc("doc_id"))
+    return out
+
+
 def search_pruned(
     index,
     terms: list[str],
@@ -217,11 +583,8 @@ def search_pruned(
     contain_all: list | None = None,
     contain_any: list | None = None,
 ) -> DataFrame:
-    """``pool_target`` overrides the candidate-pool size (tests use a tiny
-    pool to force the completeness check to fail and exercise the
-    full-evaluation fallback). ``full_cutover`` overrides the adaptive
-    pruned/full switch (postings-volume threshold; tests pin it to 0 to
-    force the pruned machinery on small corpora). ``groups`` carries
+    """Keyword block-max WAND: the one-field strategy of
+    :func:`block_max_topk` (knobs as documented there). ``groups`` carries
     synonym expansion sets: an EXPANDED conjunctive query needs per-group
     AND semantics, which phase 3's n_terms filter cannot express — such
     queries route to the group-aware full evaluation here, so the
@@ -236,38 +599,24 @@ def search_pruned(
     - ``require`` (docs matching every MUST clause, when SHOULD clauses
       also exist) and ``exclude`` (the union of MUST_NOT clauses' docs)
       are score-neutral doc-set joins applied to the PHASE-2 candidate
-      set — docs failing them can never be results, so dropping them
-      before rescoring is lossless; the completeness check runs on the
-      post-join top-k, exactly as it already does for fq filters;
+      set; the completeness check runs on the post-join top-k, exactly as
+      it already does for fq filters;
     - ``min_match`` (pure-SHOULD minimumNumberShouldMatch) filters
       phase-3 scores on the same n_terms count the conjunctive filter
       uses, again ahead of the completeness check."""
     from .search import (  # cycle-free
-        META_SCHEMA,
-        SCORE_SCHEMA,
         _apply_boosts,
-        _blocks_for_terms,
         _containment_filter,
+        _decode,
         _score_decoded,
         allowed_docs,
         full_eval,
     )
 
-    spark = index.spark
-
-    def _empty():
-        # schema contract: an empty result must carry the SAME columns a
-        # non-empty call returns (a caller selecting conv_id must not
-        # crash — reachable from select's fast path on an OOV query)
-        return spark.createDataFrame(
-            [], META_SCHEMA if with_meta else SCORE_SCHEMA
-        )
-
-    def _fallback(counter: str = "fallback"):
+    def fallback():
         # evaluate the EXACT analyzed term list — never re-join/re-analyze
         # a query string (synonym-expanded terms may not round-trip the
         # analyzer, which would make the fallback answer a different query)
-        PRUNE_STATS[counter] += 1
         return full_eval(
             index, terms, k, conjunctive=conjunctive, groups=groups,
             role=role, filters=filters, with_meta=with_meta,
@@ -280,124 +629,17 @@ def search_pruned(
         any(len(g) > 1 for g in groups) or len(groups) != len(terms)
     )
     if conjunctive and expanded:
-        return _fallback()
+        PRUNE_STATS["fallback"] += 1
+        return fallback()
 
-    # ---- phase 0: adaptive cutover from termstats (|terms| rows) -----------
-    cutover = FULL_CUTOVER_POSTINGS if full_cutover is None else full_cutover
-    stats = (
-        index.termstats.filter(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    total_postings = int(sum(r["df"] for r in stats))
-    if total_postings == 0:
-        return _empty()
-    if total_postings <= cutover:
-        return _fallback("cutover")
+    def boost_of(t):
+        return float(boosts.get(t, 1.0)) if boosts else 1.0
 
-    blocks = _blocks_for_terms(index, terms)
-    boost_of = (
-        (lambda t: float(boosts.get(t, 1.0))) if boosts else (lambda t: 1.0)
-    )
-    boosted = bool(boosts) and any(boost_of(t) != 1.0 for t in terms)
-    if boosted:
-        # selection/bound side only: block upper bounds scale with the
-        # clause boost so tau ordering and R bound BOOSTED scores; the
-        # payload columns are untouched (phase 3 applies the same boost
-        # to exact contribs via the shared fold)
-        _bmap = F.create_map(
-            *[x for t in terms for x in (F.lit(t), F.lit(boost_of(t)))]
+    def rescore(blocks_of, cand):
+        decoded = _restrict_to(
+            lambda ids: _decode(blocks_of(""), index.avgdl, ids), cand
         )
-        bound_blocks = blocks.withColumn(
-            "block_max_score", F.col("block_max_score") * _bmap[F.col("term")]
-        )
-    else:
-        bound_blocks = blocks
-    if pool_target is None:
-        # measured at 6.5M docs: the old max(8k, 4k|q|) pool left the
-        # residual bound R above theta_k (R is the SUM over terms of the
-        # best pruned bound, so a rare high-idf term's unselected blocks
-        # dominate it) — every query silently fell back to full
-        # evaluation. 64k/16k|q| postings is still ~1e-5 of a hot term.
-        pool_target = max(64 * k, 16 * k * len(terms))
-    est_meta_rows = total_postings // 128 + len(terms)
-
-    # a multi-segment view repeats block_id per segment: selection keys must
-    # then be (term, seg, block_id) — (term, block_id) alone would select a
-    # superset (harmless for correctness, wasteful at scale)
-    seg_aware = "seg" in blocks.columns
-    key_cols = ["term", "seg", "block_id"] if seg_aware else ["term", "block_id"]
-
-    if est_meta_rows <= driver_meta_cap:
-        # ---- phase 1a: exact block selection on the driver ------------------
-        meta = bound_blocks.select(*key_cols, "n", "block_max_score").toPandas()
-        if not len(meta):
-            return _empty()
-        meta = meta.sort_values(
-            ["block_max_score", *key_cols], ascending=[False] + [True] * len(key_cols)
-        ).reset_index(drop=True)
-        cum = meta["n"].cumsum()
-        take = int(np.searchsorted(cum.to_numpy(), pool_target, side="left")) + 1
-        take = min(take, len(meta))
-        # per-term floor: R sums each term's best PRUNED bound, so global
-        # by-score selection alone lets one term's untouched top blocks
-        # keep R high; always take every term's top-B blocks as well
-        per_term_b = max(2, int(np.ceil(pool_target / (128.0 * len(terms)))))
-        sel_idx = np.union1d(
-            np.arange(take),
-            meta.groupby("term", sort=False).head(per_term_b).index.to_numpy(),
-        )
-        selected = meta.loc[sel_idx]
-        pruned = meta.drop(index=sel_idx)
-        # residual bound: best pruned block per term, summed over terms
-        R = (
-            float(pruned.groupby("term")["block_max_score"].max().sum())
-            if len(pruned)
-            else 0.0
-        )
-        sel_blocks = _apply_block_selection(spark, blocks, selected, seg_aware)
-        if sel_blocks is None:
-            return _empty()
-    else:
-        # ---- phase 1b: DISTRIBUTED block selection (driver sees O(1) rows) --
-        # tau = approximate block_max_score quantile such that ~pool_target
-        # postings' worth of blocks clear it (blocks are fixed-size, so the
-        # block-count quantile tracks the postings-weighted one). The
-        # relativeError is a RANK-fraction error, so it must scale with the
-        # target fraction — a fixed 0.01 would let tau admit ~1% of ALL
-        # blocks (10^7 postings for a 10^9-df term), re-creating the driver
-        # blowup this branch exists to prevent. Greenwald-Khanna memory
-        # grows as O(1/err log(err*n)); err >= 1e-6 keeps it bounded, and
-        # the volume guard below catches any remaining overshoot.
-        frac = min(1.0, pool_target / float(total_postings))
-        err = max(1e-6, min(0.01, frac / 2.0))
-        tau = bound_blocks.stat.approxQuantile(
-            "block_max_score", [max(0.0, 1.0 - frac)], err
-        )[0]
-        sel_blocks = bound_blocks.filter(F.col("block_max_score") >= tau)
-        # volume guard: if ties at tau (or quantile error) still selected
-        # far more than the pool target, pruning wouldn't pay — evaluate
-        # fully rather than collect an oversized candidate set
-        sel_n = sel_blocks.agg(F.sum("n").alias("s")).collect()[0]["s"] or 0
-        if int(sel_n) > max(50 * pool_target, 100_000):
-            return _fallback()
-        r_row = (
-            bound_blocks.filter(F.col("block_max_score") < tau)
-            .groupBy("term")
-            .agg(F.max("block_max_score").alias("m"))
-            .agg(F.sum("m").alias("R"))
-            .collect()
-        )
-        R = float(r_row[0]["R"]) if r_row and r_row[0]["R"] is not None else 0.0
-
-    # ---- phases 2-3 as one evaluator (run once per selection pass) ----------
-    from .search import _payload_cols
-
-    def _finish(decoded, R):
-        """Shared phase-3 tail: boosts, scoring, delegated filters, top-k
-        collect, completeness check. Returns (top_rows, complete)."""
-        if boosted:
-            decoded = _apply_boosts(decoded, terms, boost_of)
+        decoded = _apply_boosts(decoded, terms, boost_of)
         need_cs = bool(contain_all or contain_any)
         scored = _score_decoded(decoded, keep_cs=need_cs)
         if need_cs:
@@ -410,646 +652,16 @@ def search_pruned(
         if conjunctive:
             scored = scored.filter(F.col("n_terms") == len(terms))
         elif min_match > 0:
-            # delegated minimumNumberShouldMatch (score-neutral doc
-            # filter like fq — the completeness check runs after it)
             scored = scored.filter(F.col("n_terms") >= int(min_match))
-        scored = scored.drop("n_terms")
         allowed = allowed_docs(index, role, filters)
         if allowed is not None:
             scored = scored.join(allowed, "doc_id", "left_semi")
-        top = (
-            scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
-        complete = R == 0.0 or (len(top) == k and top[-1]["score"] > R)
-        return top, complete
+        return scored
 
-    def _evaluate(sel_blocks, R):
-        """Phases 2-3 for ONE block selection; (top_rows, complete)."""
-        # phase 2: candidate docIDs from selected blocks
-        cand_set = (
-            sel_blocks
-            .select(*_payload_cols(sel_blocks))
-            .mapInPandas(
-                _make_filtered_decoder(index.avgdl, None), _DECODED_SCHEMA
-            )
-            .select("doc_id")
-            .distinct()
-        )
-        # delegated boolean doc-set semantics shrink the candidate set HERE,
-        # before any rescoring: a doc failing `require` or hitting `exclude`
-        # can never be a result, so the joins are lossless and phase 3
-        # decodes strictly fewer candidates
-        if require is not None:
-            cand_set = cand_set.join(require, "doc_id", "left_semi")
-        if exclude is not None:
-            cand_set = cand_set.join(exclude, "doc_id", "left_anti")
-        guard_cap = int(max(k * 64, CAND_FRAC_GUARD * total_postings))
-        if guard_cap <= driver_cand_cap:
-            # FUSED fast path: the economic guard already bounds any
-            # survivable candidate set at guard_cap (<= the driver handoff
-            # cap), so ONE bounded limit+toPandas both materializes the set
-            # and decides the guard — replacing the persist + count/bounds
-            # agg job + separate toPandas job (two driver round-trips and a
-            # cache write) of the general path below. Ids are 8 B each:
-            # the fetch is <= ~8 MB, the established driver comfort bound.
-            pdf = cand_set.limit(guard_cap + 1).toPandas()
-            n_cand = len(pdf)
-            if n_cand == 0:
-                return None, False
-            if n_cand > guard_cap:
-                raise _TooManyCandidates(n_cand)
-            candidates = np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
-            lo, hi = int(candidates[0]), int(candidates[-1])
-            blocks3 = blocks.filter(
-                (F.col("doc_max") >= lo) & (F.col("doc_min") <= hi)
-            )
-            est_meta3 = total_postings // 128 + len(terms)
-            if n_cand * est_meta3 <= BNL_CELL_CAP:
-                cand_df = spark.createDataFrame(
-                    pd.DataFrame({"cand": candidates})
-                )
-                blocks3 = blocks3.join(
-                    F.broadcast(cand_df),
-                    (F.col("cand") >= F.col("doc_min"))
-                    & (F.col("cand") <= F.col("doc_max")),
-                    "left_semi",
-                )
-            decoded = blocks3.select(*_payload_cols(blocks3)).mapInPandas(
-                _make_filtered_decoder(index.avgdl, candidates),
-                _DECODED_SCHEMA,
-            )
-            return _finish(decoded, R)
-        # general path: the guard bound exceeds the driver handoff cap
-        # (total_postings > 10 * driver_cand_cap), so the candidate set
-        # must stay distributed until its size is known
-        cand_set = cand_set.persist()
-        try:
-            cstats = cand_set.agg(
-                F.count("*").alias("n"),
-                F.min("doc_id").alias("lo"),
-                F.max("doc_id").alias("hi"),
-            ).collect()[0]
-            n_cand = int(cstats["n"] or 0)
-            if n_cand == 0:
-                return None, False
-            if n_cand > guard_cap:
-                raise _TooManyCandidates(n_cand)
-            lo, hi = int(cstats["lo"]), int(cstats["hi"])
-
-            # phase 3: exact rescore of candidates — decode ONLY blocks
-            # whose [doc_min, doc_max] range can contain a candidate (every
-            # posting of a candidate doc lives in such a block, so this
-            # prunes no needed data); coarse PUSHED bounds first (row-group
-            # min/max skipping on the scan).
-            blocks3 = blocks.filter(
-                (F.col("doc_max") >= lo) & (F.col("doc_min") <= hi)
-            )
-            est_meta3 = total_postings // 128 + len(terms)
-            if n_cand <= driver_cand_cap:
-                # DRIVER handoff: bounded sorted ids -> exact per-candidate
-                # block-range semi-join (BroadcastNestedLoop over block
-                # METADATA rows, before any payload transfer — round-2
-                # scale-up measured phase 3 decoding everything and losing
-                # to full evaluation) + the in-decoder searchsorted filter
-                candidates = np.sort(
-                    cand_set.toPandas()["doc_id"].to_numpy(dtype=np.int64)
-                )
-                # Arrow-backed: a row-by-row tuple list costs ~100x the
-                # numpy array's 8 MB at the 1M cap (round-4 ADVICE); a
-                # pandas frame ships as Arrow batches, no per-row objects
-                if n_cand * est_meta3 <= BNL_CELL_CAP:
-                    # exact block pruning pays only when the nested loop
-                    # is small (see BNL_CELL_CAP)
-                    cand_df = spark.createDataFrame(
-                        pd.DataFrame({"cand": candidates})
-                    )
-                    blocks3 = blocks3.join(
-                        F.broadcast(cand_df),
-                        (F.col("cand") >= F.col("doc_min"))
-                        & (F.col("cand") <= F.col("doc_max")),
-                        "left_semi",
-                    )
-                decoded = blocks3.select(*_payload_cols(blocks3)).mapInPandas(
-                    _make_filtered_decoder(index.avgdl, candidates),
-                    _DECODED_SCHEMA,
-                )
-            else:
-                # DISTRIBUTED handoff (no driver candidate array, no collect
-                # between phases): the nested-loop range join would cost
-                # O(meta_rows x n_cand), and huge candidate sets hit ~every
-                # block anyway (same measurement as the phrase path's
-                # PHRASE_BLOCK_JOIN_CAP), so keep only the coarse bound and
-                # semi-join candidates AFTER decode, BEFORE the groupBy
-                # shuffle — the shuffle (the scale bottleneck) still
-                # shrinks to candidate volume. NO broadcast hint: a
-                # broadcast would collect the whole over-cap set on the
-                # driver, the exact blowup this branch exists to avoid —
-                # the planner picks a shuffle semi-join (round-4 review).
-                decoded = (
-                    blocks3.select(*_payload_cols(blocks3))
-                    .mapInPandas(
-                        _make_filtered_decoder(index.avgdl, None),
-                        _DECODED_SCHEMA,
-                    )
-                    .join(cand_set, "doc_id", "left_semi")
-                )
-            # _finish collects inside this try block, while the persisted
-            # candidate set (referenced by the distributed-handoff plan)
-            # is still materialized
-            return _finish(decoded, R)
-        finally:
-            cand_set.unpersist()
-
-    try:
-        top, complete = _evaluate(sel_blocks, R)
-    except _TooManyCandidates:
-        return _fallback()
-    if complete:
-        PRUNE_STATS["pass1"] += 1
-    else:
-        # ---- pass 2: theta-refined selection (round 5) ----------------------
-        # Pass 1's k-th exact score theta is a LOWER bound on the true
-        # theta_k (its docs are real, their scores exact). Re-select with
-        # per-term threshold theta/|terms|: every pruned block then has
-        # bound < theta/|terms| strictly, so R2 < theta <= theta_k(pass 2)
-        # (pass-1 candidates are a subset of pass-2's, same filters) —
-        # completeness is GUARANTEED by construction, not hoped for. This
-        # is the batch analog of doc-at-a-time WAND's theta refinement: it
-        # replaces the old guess-a-pool-size-or-fall-back scheme with one
-        # cheap probe pass plus one exactly-sized pass, and prunes
-        # whenever the corpus has bound structure at all (the volume guard
-        # routes genuinely flat/saturated queries to full evaluation,
-        # which is the honest optimum there).
-        if top is None or len(top) < k or float(top[-1]["score"]) <= 0.0:
-            return _fallback()
-        theta = float(top[-1]["score"])
-        thresh = theta / float(len(terms))
-        if est_meta_rows <= driver_meta_cap:
-            sel2_idx = np.union1d(
-                sel_idx,
-                meta.index.to_numpy()[
-                    meta["block_max_score"].to_numpy() >= thresh
-                ],
-            )
-            if len(sel2_idx) == len(sel_idx):
-                # threshold admitted no new blocks: pass 2 would re-run
-                # pass 1's exact evaluation and fail the same check
-                return _fallback()
-            selected2 = meta.loc[sel2_idx]
-            if int(selected2["n"].sum()) > 0.5 * total_postings:
-                return _fallback()
-            pruned2 = meta.drop(index=sel2_idx)
-            R2 = (
-                float(pruned2.groupby("term")["block_max_score"].max().sum())
-                if len(pruned2)
-                else 0.0
-            )
-            sel_blocks2 = _apply_block_selection(
-                spark, blocks, selected2, seg_aware
-            )
-            if sel_blocks2 is None:
-                return _empty()
-        else:
-            # distributed pass 2: min(tau, thresh) keeps the pass-1
-            # selection a subset (the theta >= theta_k(pass 2) argument
-            # needs pass-1 candidates to remain candidates)
-            t2 = min(tau, thresh)
-            if t2 >= tau:
-                # same tau => same selection => same failed check
-                return _fallback()
-            sel_blocks2 = bound_blocks.filter(F.col("block_max_score") >= t2)
-            sel2_n = (
-                sel_blocks2.agg(F.sum("n").alias("s")).collect()[0]["s"] or 0
-            )
-            if int(sel2_n) > 0.5 * total_postings:
-                return _fallback()
-            r_row = (
-                bound_blocks.filter(F.col("block_max_score") < t2)
-                .groupBy("term")
-                .agg(F.max("block_max_score").alias("m"))
-                .agg(F.sum("m").alias("R"))
-                .collect()
-            )
-            R2 = (
-                float(r_row[0]["R"])
-                if r_row and r_row[0]["R"] is not None
-                else 0.0
-            )
-        try:
-            top, complete = _evaluate(sel_blocks2, R2)
-        except _TooManyCandidates:
-            return _fallback()
-        if not complete:
-            return _fallback()
-        PRUNE_STATS["pass2"] += 1
-
-    if not top:
-        # the pruned evaluation itself can complete with zero survivors
-        # (R == 0 and the exclude/containment/mm filters emptied the
-        # candidates) — the schema contract still applies (round-4
-        # review, second pass)
-        return _empty()
-    out = spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in top], SCORE_SCHEMA
+    return block_max_topk(
+        [("", index, {t: boost_of(t) for t in terms})], terms, k,
+        rescore=rescore, fallback=fallback, meta_index=index,
+        with_meta=with_meta, require=require, exclude=exclude,
+        pool_target=pool_target, full_cutover=full_cutover,
+        driver_meta_cap=driver_meta_cap, driver_cand_cap=driver_cand_cap,
     )
-    if with_meta:
-        m = index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
-        out = out.join(m, "doc_id", "left").orderBy(F.desc("score"), F.asc("doc_id"))
-    return out
-
-
-def dismax_pruned(
-    indexes: dict,
-    fields: list[str],
-    terms: list[str],
-    qf: dict[str, float],
-    *,
-    tie: float,
-    mm_n: int,
-    k: int,
-    meta_index,
-    with_meta: bool,
-    pool_target: int | None = None,
-    full_cutover: int | None = None,
-    driver_meta_cap: int = DRIVER_META_ROW_CAP,
-    driver_cand_cap: int = DRIVER_CAND_CAP,
-) -> DataFrame:
-    """Block-max WAND over DisjunctionMax — the pruned evaluation behind
-    ``edismax_qf`` (Lucene's BlockMaxScorer over a DisjunctionMaxQuery:
-    the /browse handler's ``defType=edismax`` + ``qf``,
-    /root/reference/conf/solr/docs/conf/solrconfig.xml:870-876).
-
-    The batch formulation extends :func:`search_pruned` field-wise:
-
-    Phase 0  per-field termstats -> adaptive full/pruned cutover.
-    Phase 1  block metadata from EVERY qf field's index, each block's
-             bound scaled by its field boost (sbound = qf_f x
-             block_max_score); blocks selected across fields in
-             descending sbound order to the pool target (driver-exact
-             below the meta cap, approx-quantile tau above it). The
-             residual bound folds per term with the SAME dismax combine
-             the scorer uses: r(t, f) = best PRUNED sbound for (t, f)
-             (0 when every (t, f) block was selected — a non-candidate
-             doc then has no (t, f) posting at all), bound_t =
-             max_f r + tie * (sum_f r - max_f r), R = sum_t bound_t.
-             Any doc outside the candidate set has all its postings in
-             pruned blocks, so its dismax score is <= R.
-    Phase 2  decode selected blocks per field -> union -> distinct
-             candidate docIDs.
-    Phase 3  exact rescore of candidates only, through the SAME
-             ``_qf_union`` + ``_qf_score`` expressions the full path
-             runs — candidate scores are bit-identical to full
-             evaluation by construction. mm filters on the same exact
-             n_terms count.
-    Check    theta_k > R (after mm) and k rows, else FALL BACK to
-             ``_qf_full`` — the pruned path can never return a different
-             answer than the full path / the pure-Python oracle.
-
-    Works unchanged over per-field MergedSegmentsView roots (seg-aware
-    selection keys, ``base``-offset decode) — seg-awareness is detected
-    per field, so monolithic and segmented field indexes can mix."""
-    from .boolean import _qf_full, _qf_score, _qf_union  # cycle-free
-    from .search import _blocks_for_terms, _payload_cols
-
-    spark = meta_index.spark
-
-    def _fallback(counter: str = "fallback"):
-        PRUNE_STATS[counter] += 1
-        return _qf_full(
-            indexes, fields, terms, qf, tie, mm_n, k, meta_index, with_meta
-        )
-
-    # ---- phase 0: adaptive cutover from per-field termstats ----------------
-    cutover = FULL_CUTOVER_POSTINGS if full_cutover is None else full_cutover
-    st = None
-    for f in fields:
-        s = (
-            indexes[f].termstats.filter(F.col("term").isin(terms))
-            .select(F.lit(f).alias("field"), "term", "df")
-        )
-        st = s if st is None else st.unionByName(s)
-    total_postings = int(sum(int(r["df"]) for r in st.collect()))
-    if total_postings <= cutover:
-        return _fallback("cutover")
-
-    if pool_target is None:
-        pool_target = max(64 * k, 16 * k * len(terms))
-    est_meta_rows = total_postings // 128 + len(terms) * len(fields)
-
-    # normalized bound metadata across fields (seg = -1 when monolithic);
-    # narrow projection — the payload columns never reach these scans
-    per_field_blocks = {}
-    bmeta = None
-    for f in fields:
-        blocks = _blocks_for_terms(indexes[f], terms)
-        per_field_blocks[f] = blocks
-        seg_col = (
-            F.col("seg") if "seg" in blocks.columns else F.lit(-1)
-        ).alias("seg")
-        m = blocks.select(
-            F.lit(f).alias("field"),
-            "term",
-            seg_col,
-            "block_id",
-            "n",
-            (F.col("block_max_score") * F.lit(float(qf[f]))).alias("sbound"),
-        )
-        bmeta = m if bmeta is None else bmeta.unionByName(m)
-
-    if est_meta_rows <= driver_meta_cap:
-        # ---- phase 1a: exact cross-field selection on the driver ----------
-        meta = bmeta.toPandas()
-        if not len(meta):
-            return _fallback()
-        meta = meta.sort_values(
-            ["sbound", "field", "term", "seg", "block_id"],
-            ascending=[False, True, True, True, True],
-        ).reset_index(drop=True)
-        cum = meta["n"].cumsum()
-        take = int(np.searchsorted(cum.to_numpy(), pool_target, side="left")) + 1
-        take = min(take, len(meta))
-        # per-(term, field) floor — R's dismax combine is driven by each
-        # (t, f)'s best pruned bound, so every list's top blocks must be
-        # in the selection or that list alone keeps R high
-        per_ft_b = max(
-            2, int(np.ceil(pool_target / (128.0 * len(terms) * len(fields))))
-        )
-        sel_idx = np.union1d(
-            np.arange(take),
-            meta.groupby(["field", "term"], sort=False)
-            .head(per_ft_b)
-            .index.to_numpy(),
-        )
-        selected = meta.loc[sel_idx]
-        pruned = meta.drop(index=sel_idx)
-        if len(pruned):
-            r_ft = pruned.groupby(["term", "field"])["sbound"].max()
-            R = 0.0
-            for t in r_ft.index.get_level_values(0).unique():
-                vals = np.atleast_1d(
-                    np.asarray(r_ft.loc[t], dtype=np.float64)
-                )
-                mx = float(vals.max())
-                R += mx + float(tie) * (float(vals.sum()) - mx)
-        else:
-            R = 0.0
-
-        def sel_filter(f, blocks):
-            sf = selected[selected["field"] == f]
-            return _apply_block_selection(
-                spark, blocks, sf, "seg" in blocks.columns
-            )
-
-    else:
-        # ---- phase 1b: DISTRIBUTED selection (driver sees O(1) rows) ------
-        # identical tau mechanics to search_pruned phase 1b; the residual
-        # combine collects only |terms| x |fields| partial maxima
-        frac = min(1.0, pool_target / float(total_postings))
-        err = max(1e-6, min(0.01, frac / 2.0))
-        tau = bmeta.stat.approxQuantile(
-            "sbound", [max(0.0, 1.0 - frac)], err
-        )[0]
-        sel_n = (
-            bmeta.filter(F.col("sbound") >= tau)
-            .agg(F.sum("n").alias("s"))
-            .collect()[0]["s"]
-            or 0
-        )
-        if int(sel_n) > max(50 * pool_target, 100_000):
-            return _fallback()
-        r_rows = (
-            bmeta.filter(F.col("sbound") < tau)
-            .groupBy("term", "field")
-            .agg(F.max("sbound").alias("m"))
-            .collect()
-        )
-        by_t: dict = {}
-        for r in r_rows:
-            by_t.setdefault(r["term"], []).append(float(r["m"]))
-        R = sum(
-            max(v) + float(tie) * (sum(v) - max(v)) for v in by_t.values()
-        )
-
-        def sel_filter(f, blocks):
-            return blocks.filter(
-                F.col("block_max_score") * F.lit(float(qf[f])) >= tau
-            )
-
-    # ---- phases 2-3 as one evaluator (run once per selection pass) ---------
-    def _evaluate(sel_filter, R):
-        """Phases 2-3 for ONE cross-field selection; (top_rows, complete)."""
-        cand = None
-        for f in fields:
-            b = sel_filter(f, per_field_blocks[f])
-            if b is None:
-                continue
-            d = (
-                b.select(*_payload_cols(b))
-                .mapInPandas(
-                    _make_filtered_decoder(indexes[f].avgdl, None),
-                    _DECODED_SCHEMA,
-                )
-                .select("doc_id")
-            )
-            cand = d if cand is None else cand.unionByName(d)
-        if cand is None:
-            return None, False
-
-        def _finish(un, R):
-            scored = _qf_score(un, tie)
-            if mm_n > 0:
-                scored = scored.filter(F.col("n_terms") >= mm_n)
-            top = (
-                scored.select("doc_id", "score")
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            complete = R == 0.0 or (len(top) == k and top[-1]["score"] > R)
-            return top, complete
-
-        def _driver_union(candidates, lo, hi):
-            rng = (F.col("doc_max") >= lo) & (F.col("doc_min") <= hi)
-            est_meta3 = total_postings // 128 + len(terms) * len(fields)
-            if len(candidates) * est_meta3 <= BNL_CELL_CAP:
-                cand_df = spark.createDataFrame(
-                    pd.DataFrame({"cand": candidates})
-                )
-
-                def p3_filter(f, blocks):
-                    return blocks.filter(rng).join(
-                        F.broadcast(cand_df),
-                        (F.col("cand") >= F.col("doc_min"))
-                        & (F.col("cand") <= F.col("doc_max")),
-                        "left_semi",
-                    )
-            else:
-
-                def p3_filter(f, blocks):
-                    return blocks.filter(rng)
-
-            return _qf_union(
-                indexes, fields, terms, qf,
-                block_filter=p3_filter, cand=candidates,
-            )
-
-        guard_cap = int(max(k * 64, CAND_FRAC_GUARD * total_postings))
-        if guard_cap <= driver_cand_cap:
-            # FUSED fast path (see search_pruned._evaluate): one bounded
-            # limit+toPandas replaces persist + count/bounds agg + a
-            # second toPandas — the guard bound itself fits the driver
-            pdf = cand.distinct().limit(guard_cap + 1).toPandas()
-            n_cand = len(pdf)
-            if n_cand == 0:
-                return None, False
-            if n_cand > guard_cap:
-                raise _TooManyCandidates(n_cand)
-            candidates = np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
-            return _finish(
-                _driver_union(
-                    candidates, int(candidates[0]), int(candidates[-1])
-                ),
-                R,
-            )
-        cand_set = cand.distinct().persist()
-        try:
-            cstats = cand_set.agg(
-                F.count("*").alias("n"),
-                F.min("doc_id").alias("lo"),
-                F.max("doc_id").alias("hi"),
-            ).collect()[0]
-            n_cand = int(cstats["n"] or 0)
-            if n_cand == 0:
-                return None, False
-            if n_cand > guard_cap:
-                raise _TooManyCandidates(n_cand)
-            lo, hi = int(cstats["lo"]), int(cstats["hi"])
-
-            # phase 3: exact per-field rescore of candidates
-            if n_cand <= driver_cand_cap:
-                candidates = np.sort(
-                    cand_set.toPandas()["doc_id"].to_numpy(dtype=np.int64)
-                )
-                un = _driver_union(candidates, lo, hi)
-            else:
-                # distributed handoff: coarse bound only, candidate
-                # semi-join after decode, before the groupBy shuffle (same
-                # rationale and no-broadcast rule as search_pruned's
-                # over-cap branch)
-                rng = (F.col("doc_max") >= lo) & (F.col("doc_min") <= hi)
-                un = _qf_union(
-                    indexes, fields, terms, qf,
-                    block_filter=lambda f, blocks: blocks.filter(rng),
-                ).join(cand_set, "doc_id", "left_semi")
-            # collect happens inside the try: the persisted candidate set
-            # backing the distributed-handoff plan is still materialized
-            return _finish(un, R)
-        finally:
-            cand_set.unpersist()
-
-    try:
-        top, complete = _evaluate(sel_filter, R)
-    except _TooManyCandidates:
-        return _fallback()
-    if complete:
-        PRUNE_STATS["pass1"] += 1
-    else:
-        # ---- pass 2: theta-refined selection (see search_pruned) ----------
-        # dismax per-term bound from per-field residuals r(t, f):
-        # bound_t = max_f r + tie * (sum_f r - max_f r)
-        #        <= (1 + tie * (|fields| - 1)) * max_f r,
-        # so pruning only (t, f) blocks with
-        # sbound < theta / (|terms| * (1 + tie * (|fields| - 1)))
-        # gives bound_t < theta/|terms| and R2 < theta <= theta_k(pass 2):
-        # completeness guaranteed by construction.
-        if top is None or len(top) < k or float(top[-1]["score"]) <= 0.0:
-            return _fallback()
-        theta = float(top[-1]["score"])
-        thresh = theta / (
-            float(len(terms)) * (1.0 + float(tie) * (len(fields) - 1))
-        )
-        if est_meta_rows <= driver_meta_cap:
-            sel2_idx = np.union1d(
-                sel_idx,
-                meta.index.to_numpy()[meta["sbound"].to_numpy() >= thresh],
-            )
-            if len(sel2_idx) == len(sel_idx):
-                return _fallback()
-            selected2 = meta.loc[sel2_idx]
-            if int(selected2["n"].sum()) > 0.5 * total_postings:
-                return _fallback()
-            pruned2 = meta.drop(index=sel2_idx)
-            if len(pruned2):
-                r_ft2 = pruned2.groupby(["term", "field"])["sbound"].max()
-                R2 = 0.0
-                for t in r_ft2.index.get_level_values(0).unique():
-                    vals = np.atleast_1d(
-                        np.asarray(r_ft2.loc[t], dtype=np.float64)
-                    )
-                    mx = float(vals.max())
-                    R2 += mx + float(tie) * (float(vals.sum()) - mx)
-            else:
-                R2 = 0.0
-
-            def sel_filter2(f, blocks):
-                sf = selected2[selected2["field"] == f]
-                return _apply_block_selection(
-                    spark, blocks, sf, "seg" in blocks.columns
-                )
-
-        else:
-            t2 = min(tau, thresh)
-            if t2 >= tau:
-                return _fallback()
-            sel2_n = (
-                bmeta.filter(F.col("sbound") >= t2)
-                .agg(F.sum("n").alias("s"))
-                .collect()[0]["s"]
-                or 0
-            )
-            if int(sel2_n) > 0.5 * total_postings:
-                return _fallback()
-            r_rows2 = (
-                bmeta.filter(F.col("sbound") < t2)
-                .groupBy("term", "field")
-                .agg(F.max("sbound").alias("m"))
-                .collect()
-            )
-            by_t2: dict = {}
-            for r in r_rows2:
-                by_t2.setdefault(r["term"], []).append(float(r["m"]))
-            R2 = sum(
-                max(v) + float(tie) * (sum(v) - max(v))
-                for v in by_t2.values()
-            )
-
-            def sel_filter2(f, blocks):
-                return blocks.filter(
-                    F.col("block_max_score") * F.lit(float(qf[f])) >= t2
-                )
-
-        try:
-            top, complete = _evaluate(sel_filter2, R2)
-        except _TooManyCandidates:
-            return _fallback()
-        if not complete:
-            return _fallback()
-        PRUNE_STATS["pass2"] += 1
-
-    from .search import META_SCHEMA, SCORE_SCHEMA
-
-    if not top:
-        return spark.createDataFrame(
-            [], META_SCHEMA if with_meta else SCORE_SCHEMA
-        )
-    out = spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in top], SCORE_SCHEMA
-    )
-    if with_meta:
-        m = meta_index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
-        out = out.join(m, "doc_id", "left").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-    return out

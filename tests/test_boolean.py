@@ -1127,18 +1127,50 @@ def test_fielded_scoring_clause(spark, tmp_path_factory):
         boolean_search(idx, f"title:{tt}", k=5)
 
 
-def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory):
-    """Round-5: block-max WAND over DisjunctionMax (wand.dismax_pruned).
-    Every branch combination — driver/distributed phase 1, driver/
-    distributed candidate handoff, tiny pool (forces the completeness
-    fallback), all-blocks pool (R == 0, certifies the pruned phase 3
-    itself) — returns EXACTLY the full path's (doc_id, score) rows:
-    phase 3 rescoring runs the same _qf_union/_qf_score expressions, so
-    candidate scores are bit-identical, and the completeness check makes
-    pruning lossless."""
+# Cap settings of the pruned edismax_qf matrix, with the Spark jobs one
+# two-field call may launch for the hot-term and the mid-df query: the
+# counts measured by the test below on the code before keyword search
+# and DisMax shared one block-max engine (job counts do not depend on the
+# host, so an added driver round-trip fails here).
+QF_PRUNED_SETTINGS = {
+    "driver": ({}, {"hot": 13, "mid": 15}),  # phase 1a + driver handoff
+    "tiny_pool": ({"pool_target": 2}, {"hot": 13, "mid": 15}),
+    "all_blocks": ({"pool_target": 10**9}, {"hot": 13, "mid": 15}),
+    "distributed_selection": (
+        {"driver_meta_cap": 0}, {"hot": 18, "mid": 19},
+    ),
+    "distributed_handoff": (
+        {"driver_cand_cap": 0}, {"hot": 15, "mid": 18},
+    ),
+    "distributed_both": (
+        {"driver_meta_cap": 0, "driver_cand_cap": 0}, {"hot": 20, "mid": 22},
+    ),
+}
+
+
+def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory, job_count):
+    """Round-5: block-max WAND over DisjunctionMax (wand.block_max_topk
+    with one block source per qf field). Every branch combination —
+    driver/distributed phase 1, driver/distributed candidate handoff,
+    tiny pool (the completeness check), all-blocks pool (R == 0,
+    certifies the pruned phase 3 itself) — returns EXACTLY the full
+    path's (doc_id, score) rows within its Spark job budget: phase 3
+    rescoring runs the same _qf_union/_qf_score expressions, so candidate
+    scores are bit-identical, and the completeness check makes pruning
+    lossless. The hot-term query trips the candidate guard (fallback);
+    the mid-df query is answered by the pruning itself. With one field
+    (qf text^1, tie 0, mm 0) every setting answers exactly like keyword
+    search(mode="pruned"), by the same path."""
     import pyspark.sql.functions as F
 
     from parser_indexer_py_spark.index.boolean import edismax_qf
+    from parser_indexer_py_spark.index.wand import PRUNE_STATS
+
+    def answered_by(run):
+        before = dict(PRUNE_STATS)
+        n_jobs, rows = job_count(lambda: _rows(run()))
+        moved = {p for p in PRUNE_STATS if PRUNE_STATS[p] != before[p]}
+        return rows, moved, n_jobs
 
     base = generate_transcripts(spark, 60, partitions=3)
     title = F.array_join(F.slice(F.split(F.col("text"), " "), 1, 2), " ")
@@ -1149,11 +1181,20 @@ def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory):
         out = str(tmp_path_factory.mktemp(f"qfp_{fname}"))
         build_index(spark, df, out, n_chunks=1)
         idxs[fname] = load_index(spark, out)
-    ts = idxs["text"].termstats.orderBy(F.desc("df"), "term").limit(3)
-    t1, t2 = [r["term"] for r in ts.collect()][:2]
-    q = f"{t1} {t2}"
+    by_df = [
+        r["term"]
+        for r in idxs["text"].termstats.orderBy(F.desc("df"), "term").collect()
+    ]
+    queries = {
+        "hot": f"{by_df[0]} {by_df[1]}",
+        "mid": f"{by_df[len(by_df) // 20]} {by_df[len(by_df) // 20 + 1]}",
+    }
     qf = {"text": 0.5, "title": 10.0}
-    for tie, mm in [(0.0, 0), (0.1, "100%")]:
+    pruned_paths = set()
+    for qname, tie, mm in [
+        ("hot", 0.0, 0), ("hot", 0.1, "100%"), ("mid", 0.1, 0),
+    ]:
+        q = queries[qname]
         full = _rows(
             edismax_qf(
                 idxs, q, qf, k=5, tie=tie, mm=mm, mode="full",
@@ -1161,22 +1202,37 @@ def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory):
             )
         )
         assert full  # non-vacuous
-        for kw in [
-            {},                          # driver phase 1a + driver handoff
-            {"pool_target": 2},          # completeness fallback branch
-            {"pool_target": 10**9},      # all blocks selected -> R == 0
-            {"driver_meta_cap": 0},      # distributed phase 1b (tau)
-            {"driver_cand_cap": 0},      # distributed candidate handoff
-            {"driver_meta_cap": 0, "driver_cand_cap": 0},
-        ]:
-            got = _rows(
-                edismax_qf(
+        for name, (kw, budget) in QF_PRUNED_SETTINGS.items():
+            got, moved, n_jobs = answered_by(
+                lambda: edismax_qf(
                     idxs, q, qf, k=5, tie=tie, mm=mm, mode="pruned",
                     full_cutover=0, with_meta=False, **kw
                 )
             )
-            assert got == full, (tie, mm, kw)
+            assert got == full, (qname, tie, mm, name)
+            assert n_jobs <= budget[qname], (qname, tie, name, n_jobs)
+            pruned_paths |= moved & {"pass1", "pass2"}
+    # the matrix would pass vacuously if every setting fell back
+    assert pruned_paths, "no two-field setting was answered by pruning"
+    # keyword search is the one-field case of the same engine
+    text = idxs["text"]
+    for q in queries.values():
+        for name, (kw, _) in QF_PRUNED_SETTINGS.items():
+            dismax = answered_by(
+                lambda: edismax_qf(
+                    {"text": text}, q, {"text": 1.0}, k=5, tie=0.0, mm=0,
+                    mode="pruned", full_cutover=0, with_meta=False, **kw
+                )
+            )
+            keyword = answered_by(
+                lambda: search(
+                    text, q, k=5, mode="pruned", full_cutover=0,
+                    with_meta=False, **kw
+                )
+            )
+            assert dismax[:2] == keyword[:2], (q, name)
     # auto mode on a tiny corpus rides the cutover to full — same rows
+    q = queries["hot"]
     assert _rows(
         edismax_qf(idxs, q, qf, k=5, mode="auto", with_meta=False)
     ) == _rows(edismax_qf(idxs, q, qf, k=5, mode="full", with_meta=False))

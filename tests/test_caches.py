@@ -256,3 +256,60 @@ def test_filter_cache_keys_on_index_identity(cindex, tmp_path, spark):
     k_main = _fields_key({"text": cindex})
     assert _fields_key({"text": other}) != k_main
     assert _fields_key({"text": same_root_again}) == k_main
+
+
+def test_pathless_view_identity_is_never_recycled(cindex):
+    """A path-less view keys the filterCache by a stamp set on first
+    sight, not by ``id()`` — once a view is collected CPython may hand its
+    id to the next object, and a new, different view must not hit the
+    dead one's cached docset."""
+    import gc
+
+    class View:  # a path-less field index, like a merged-segments view
+        def __init__(self, ix):
+            self.ix = ix
+
+        def __getattr__(self, name):
+            if name == "paths":
+                raise AttributeError(name)
+            return getattr(self.ix, name)
+
+    caches = SearcherCaches()
+    fq = "title:bace"  # fielded fq: evaluated over the mapped view
+    first = View(cindex)
+    caches.filter_docset(cindex, fq, field_indexes={"title": first})
+    del first
+    gc.collect()
+    second = View(cindex)  # CPython usually reuses the freed slot
+    caches.filter_docset(cindex, fq, field_indexes={"title": second})
+    assert caches.filter_cache.stats["hits"] == 0
+    assert caches.filter_cache.stats["inserts"] == 2
+    caches.invalidate()
+
+
+def test_unanchored_now_bypasses_caches(cindex):
+    """An un-anchored NOW request is answered at its own instant but
+    never inserted — repeated requests leave each cache's size and
+    eviction count unchanged instead of flooding the LRU with never-hit
+    keys (Solr: un-rounded NOW is uncacheable)."""
+    from parser_indexer_py_spark.index.boolean import select
+
+    caches = SearcherCaches(filter_size=1, query_result_size=1)
+    fq = "ts:[NOW-10YEARS TO NOW]"
+    caches.search(cindex, "bace", rows=5, fq="role:assistant").collect()
+    before = caches.stats
+    want = _page(boolean_search(cindex, "bace", k=5, fq=fq, with_meta=True))
+    assert want  # the window covers the corpus
+    for _ in range(2):
+        assert _page(caches.search(cindex, "bace", rows=5, fq=fq)) == want
+        assert _page(
+            select(cindex, q="bace", rows=5, fq=fq, caches=caches)[
+                "response"
+            ]
+        ) == want
+        caches.filter_docset(cindex, fq).collect()
+    after = caches.stats
+    for name in ("filter", "query_result"):
+        assert after[name]["size"] == before[name]["size"] == 1, name
+        assert after[name]["evictions"] == before[name]["evictions"] == 0
+    caches.invalidate()

@@ -104,6 +104,43 @@ def test_date_math_range_query(didx):
         assert 0 < len(want) < len(full), (q, len(want), len(full))
 
 
+def test_select_resolves_one_now_per_request(didx, monkeypatch):
+    """An un-anchored select reads the clock ONCE — q, fq and the date
+    facet.range all resolve against that one instant, even with a clock
+    that ticks a year per read (a second read would move the fq window
+    off the 2025 corpus)."""
+    import parser_indexer_py_spark.index.boolean as boolean_mod
+
+    start = _u(2025, 7, 1)
+    reads = []
+
+    class TickingClock(datetime):
+        @classmethod
+        def now(cls, tz=None):
+            reads.append(start.replace(year=start.year + len(reads)))
+            return reads[-1]
+
+    monkeypatch.setattr(boolean_mod, "datetime", TickingClock)
+    q = "cedi ts:[NOW/YEAR-1YEAR TO *]"
+    fq = "ts:[NOW/YEAR TO NOW/YEAR+1YEAR}"
+    facet = {"facet_range": ("ts", "NOW/YEAR", "NOW/YEAR+1YEAR", "+6MONTHS")}
+    for extra in ({}, facet):  # fast page path, then the match-set path
+        reads.clear()
+        got = select(didx, q, fq=fq, rows=5, **extra)
+        assert len(reads) == 1, extra
+        want = select(didx, q, fq=fq, rows=5, now=start, **extra)
+        page = [(r["doc_id"], r["score"]) for r in got["response"].collect()]
+        assert page, extra
+        assert page == [
+            (r["doc_id"], r["score"]) for r in want["response"].collect()
+        ], extra
+        if extra:
+            assert (
+                got["range_facets"].collect()
+                == want["range_facets"].collect()
+            )
+
+
 def test_date_facet_range(didx):
     """The /browse date facet defaults shape: monthly buckets over two
     years, every edge emitted (zeros included), counts equal the manual

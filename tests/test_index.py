@@ -365,6 +365,59 @@ def test_pruned_fallback_path(index, oracle):
     assert got == want
 
 
+# Spark jobs one pruned call may launch on each forced path, per strategy:
+# the counts measured by this test on the code before keyword search and
+# DisMax shared one block-max engine. Job counts do not depend on the
+# host, so an added driver round-trip on any path fails here.
+@pytest.mark.parametrize(
+    "knobs, q_name, answered, budget",
+    [
+        ({}, "q_single", "pass1", {"keyword": 10, "dismax": 12}),
+        (
+            {"driver_meta_cap": 0}, "q_single", "pass1",
+            {"keyword": 15, "dismax": 16},
+        ),
+        (
+            {"driver_cand_cap": 0}, "q_single", "pass1",
+            {"keyword": 12, "dismax": 14},
+        ),
+        (
+            {"pool_target": 1}, "q_multi_or", "fallback",
+            {"keyword": 12, "dismax": 15},
+        ),
+    ],
+    ids=["driver", "distributed_selection", "distributed_handoff", "fallback"],
+)
+def test_pruned_job_budget(index, oracle, job_count, knobs, q_name, answered,
+                           budget):
+    """Keyword search and single-field DisMax (qf text^1, tie 0, mm 0 —
+    keyword search IS one-field DisMax) on each forced path: the oracle's
+    rows, the named path, and no more Spark jobs than the budget."""
+    from parser_indexer_py_spark.index.boolean import edismax_qf
+    from parser_indexer_py_spark.index.wand import PRUNE_STATS
+
+    q = _queries(oracle)[q_name]
+    runs = {
+        "keyword": lambda: search(
+            index, q, k=10, mode="pruned", full_cutover=0, with_meta=False,
+            **knobs,
+        ),
+        "dismax": lambda: edismax_qf(
+            {"text": index}, q, {"text": 1.0}, k=10, tie=0.0, mm=0,
+            mode="pruned", full_cutover=0, with_meta=False, **knobs,
+        ),
+    }
+    for strategy, run in runs.items():
+        before = dict(PRUNE_STATS)
+        n_jobs, rows = job_count(
+            lambda: [(r["doc_id"], r["score"]) for r in run().collect()]
+        )
+        assert rows == oracle.search(q, k=10), strategy
+        moved = {p for p in PRUNE_STATS if PRUNE_STATS[p] != before[p]}
+        assert moved == {answered}, (strategy, moved)
+        assert n_jobs <= budget[strategy], (strategy, n_jobs)
+
+
 def test_score_ties_break_by_docid(spark, tmp_path_factory):
     """FIXTURES.md q_topk_ties: identical texts produce identical scores;
     the tie must break by ascending docID, identically to the oracle."""
