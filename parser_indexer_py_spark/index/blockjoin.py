@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .search import clamp_k, local_frame
+
 __all__ = ["parent_search", "SCORE_MODES"]
 
 SCORE_MODES = ("max", "total", "avg", "min", "none")
@@ -132,7 +134,9 @@ def parent_search(
     )
     if min_children > 1:
         rolled = rolled.filter(F.col("n_matched") >= int(min_children))
-    return rolled.orderBy(F.desc("score"), F.asc("parent")).limit(int(k))
+    return rolled.orderBy(F.desc("score"), F.asc("parent")).limit(
+        clamp_k(k, index)
+    )
 
 
 _PRUNED_CAP = 200_000  # driver rows ceiling before falling back to full
@@ -203,7 +207,7 @@ def _parent_pruned(
                 T.StructField("n_matched", T.LongType(), True),
             ]
         )
-        return index.spark.createDataFrame(rows, schema)
+        return local_frame(index.spark, rows, schema)
     # pathological overlap (k parents need > _PRUNED_CAP docs): full eval
     return parent_search(
         index, q, k=k, score_mode=score_mode, parent_field=parent_field,

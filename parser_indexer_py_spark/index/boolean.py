@@ -80,6 +80,9 @@ from .search import (
     _docs_with_any,
     _score_decoded,
     allowed_docs,
+    clamp_k,
+    empty_result,
+    local_frame,
     phrase_scores,
 )
 
@@ -747,16 +750,6 @@ def _hl_section(
     )
 
 
-def _empty_result(index: Index, with_meta: bool) -> DataFrame:
-    """Empty result with the SAME schema a non-empty call returns — a
-    caller selecting conv_id on an empty result must not crash."""
-    from .search import META_SCHEMA, SCORE_SCHEMA
-
-    return index.spark.createDataFrame(
-        [], META_SCHEMA if with_meta else SCORE_SCHEMA
-    )
-
-
 def _apply_fl(resp: DataFrame, fl) -> DataFrame:
     """Solr fl: validate-and-project the response columns (shared by the
     fast and match-set paths of select()). ``"*"`` expands to every
@@ -929,7 +922,7 @@ def boolean_search(
         must = sorted(set(pq.must_terms))
         terms = sorted(set(should) | set(must))
         if min_should_match > len(should):
-            return _empty_result(index, with_meta)
+            return empty_result(index.spark, with_meta)
         # MUST alongside SHOULD terms and flattened MUST groups are
         # TERM-containment constraints: they ride the scoring
         # aggregation's collected structs (search._containment_filter —
@@ -992,7 +985,7 @@ def boolean_search(
         min_should_match=min_should_match, field_indexes=field_indexes,
     )
     if out is None:
-        return _empty_result(index, with_meta)
+        return empty_result(index.spark, with_meta)
     if fq:
         out = _apply_fq(index, out, fq, default_op, field_indexes, now)
     if require is not None:
@@ -1007,7 +1000,9 @@ def boolean_search(
         out = _apply_boost_funcs(
             index, out, multiplicative_boost, now, multiply=True
         )
-    topk = out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    topk = out.orderBy(F.desc("score"), F.asc("doc_id")).limit(
+        clamp_k(k, index)
+    )
     if with_meta:
         meta = index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
         topk = topk.join(meta, "doc_id", "left").orderBy(
@@ -1281,7 +1276,7 @@ def _qf_full(
     topk = (
         scored.select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .limit(clamp_k(k, meta_index))
     )
     if with_meta:
         meta = meta_index.docmap.select(
@@ -1373,7 +1368,7 @@ def edismax_qf(
     meta_index = indexes["text"] if "text" in qf else indexes[fields[0]]
     mm_n = _parse_mm(mm, len(terms))
     if mm_n > len(terms):
-        return _empty_result(meta_index, with_meta)
+        return empty_result(meta_index.spark, with_meta)
 
     if mode not in ("auto", "full", "pruned"):
         raise ValueError(f"mode must be auto|full|pruned, got {mode!r}")
@@ -1752,8 +1747,9 @@ def select(
             # every bucket is emitted, zeros included (Solr emits the
             # full edge walk). Buckets are labeled by their lower-bound
             # timestamp — the ISO rendering Solr does is presentation.
-            edges_df = index.spark.createDataFrame(
-                range_edges, "bucket timestamp, bucket_end timestamp"
+            edges_df = local_frame(
+                index.spark, range_edges,
+                "bucket timestamp, bucket_end timestamp",
             )
             counts = (
                 scored.select("doc_id")

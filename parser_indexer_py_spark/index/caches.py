@@ -23,7 +23,9 @@ type its semantics call for:
   new search. Implemented verbatim: the engine runs once for
   ``ceil((start+rows)/20)*20`` rows, the id+score list is cached
   driver-side (bounded: <= 200 tuples), and any later page inside the
-  cached prefix never launches a scoring job. An entry that exhausted
+  cached prefix launches no Spark job at all: the page (ids and scores
+  from this cache, metadata from the documentCache) goes back as an
+  Arrow ``LocalRelation`` (``search.local_frame``). An entry that exhausted
   the match set (returned fewer rows than asked) also serves every
   DEEPER page (they are empty by construction).
 - **documentCache** (:478, size=512): stored fields by internal doc id.
@@ -306,7 +308,7 @@ class SearcherCaches:
         any text carries a NOW anchor; an un-anchored NOW request is
         answered without inserting into any cache."""
         from .boolean import boolean_search
-        from .search import META_SCHEMA
+        from .search import META_SCHEMA, empty_result, local_frame
 
         fqs = tuple([fq] if isinstance(fq, str) else list(fq or []))
         require, uncached = self.filter_docsets(
@@ -314,7 +316,7 @@ class SearcherCaches:
         )
         now_key, now, cacheable = _resolve_now(now, q, *fqs)
         if rows <= 0:
-            return index.spark.createDataFrame([], META_SCHEMA)
+            return empty_result(index.spark, with_meta=True)
         need = start + rows
         if need > self.max_docs_cached or not cacheable:
             # Solr: pages beyond queryResultMaxDocsCached are never
@@ -349,7 +351,7 @@ class SearcherCaches:
             (i, s) + meta.get(i, (None, None, None))
             for i, s in ids_scores
         ]
-        return index.spark.createDataFrame(data, META_SCHEMA)
+        return local_frame(index.spark, data, META_SCHEMA)
 
     # -- warming ------------------------------------------------------------
     def warm(self, index, queries: list) -> int:

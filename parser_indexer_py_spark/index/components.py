@@ -51,7 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .search import Index, search
+from .search import Index, local_frame, search
 
 __all__ = [
     "terms_enum",
@@ -280,8 +280,10 @@ def elevate(
     if len(set(ids)) != len(ids):
         raise ValueError("duplicate ids in elevation list")
 
-    elev_df = spark.createDataFrame(
-        [(d, i) for i, d in enumerate(ids)], "doc_id long, elev_rank int"
+    elev_df = local_frame(
+        spark,
+        [(d, i) for i, d in enumerate(ids)],
+        "doc_id long, elev_rank int",
     )
     # over-fetch by |elevated|: after removing elevated rows from the
     # organic ranking there must still be k rows left to fill the page
@@ -356,8 +358,8 @@ def cluster_results(
     top = search(index, query, k=k, with_meta=False, mode=mode, **search_kw)
     ids = [int(r["doc_id"]) for r in top.select("doc_id").collect()]
     if not ids:
-        return index.spark.createDataFrame(
-            [], "label string, doc_id long, size long"
+        return local_frame(
+            index.spark, [], "label string, doc_id long, size long"
         )
     qterms = set(analyze_text(query))
     tv = term_vectors(index, ids, with_df=True, with_positions=False)
@@ -383,9 +385,7 @@ def cluster_results(
     # it goes straight to the Other Topics bucket. The page ids were
     # already collected above; reuse them instead of re-executing the
     # search inside this plan
-    ids_df = index.spark.createDataFrame(
-        [(int(d),) for d in ids], "doc_id long"
-    )
+    ids_df = local_frame(index.spark, [(int(d),) for d in ids], "doc_id long")
     best = (
         ids_df.join(best, "doc_id", "left")
         .withColumn("label", F.coalesce("label", F.lit("Other Topics")))

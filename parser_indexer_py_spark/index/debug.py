@@ -34,7 +34,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import analyze_text
-from .search import _blocks_for_terms, _decode, search
+from .search import (
+    SCORE_SCHEMA,
+    _blocks_for_terms,
+    _decode,
+    local_frame,
+    search,
+)
 
 
 def explain(index, query: str, k: int = 10) -> DataFrame:
@@ -54,23 +60,17 @@ def explain(index, query: str, k: int = 10) -> DataFrame:
     hits = search(index, query, k=k, with_meta=False)
     rows = hits.collect()  # bounded: the k-row page being explained
     if not rows:
-        return hits.sparkSession.createDataFrame(
+        return local_frame(
+            hits.sparkSession,
             [],
             "doc_id long, term string, tf long, df long, "
             "idf double, contrib double, score double",
         )
     cand = np.sort(np.array([r["doc_id"] for r in rows], dtype=np.int64))
-    # Arrow-backed (columnar) page frame — no per-row tuple serialization
-    # even when the caller explains a large page (k=all driver queries)
-    import pandas as pd
-
-    page = hits.sparkSession.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": np.array([r["doc_id"] for r in rows], dtype=np.int64),
-                "score": np.array([r["score"] for r in rows], dtype=np.float64),
-            }
-        )
+    page = local_frame(
+        hits.sparkSession,
+        [(r["doc_id"], r["score"]) for r in rows],
+        SCORE_SCHEMA,
     )
     decoded = _decode(_blocks_for_terms(index, terms), index.avgdl, cand)
     stats = index.termstats.filter(F.col("term").isin(terms)).select(

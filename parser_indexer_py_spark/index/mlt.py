@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import analyze_text
-from .search import Index
+from .search import Index, empty_result
 
 __all__ = [
     "MLT_DEFAULTS",
@@ -140,11 +140,7 @@ def more_like_this(
         )
     ]
     if not terms:
-        schema = (
-            "doc_id long, score double, conv_id string, turn_idx int, "
-            "role string" if with_meta else "doc_id long, score double"
-        )
-        return index.spark.createDataFrame([], schema)
+        return empty_result(index.spark, with_meta)
     # a ~25-term disjunction is exactly the shape block-max WAND prunes;
     # the completeness check falls back to full evaluation when the bound
     # fails, so results stay rank-identical to the full path (measured at
@@ -211,11 +207,7 @@ def more_like_this_qf(
         )
     meta_index = indexes.get(meta_field) or indexes[sorted(indexes)[0]]
     if not parts:
-        schema = (
-            "doc_id long, score double, conv_id string, turn_idx int, "
-            "role string" if with_meta else "doc_id long, score double"
-        )
-        return meta_index.spark.createDataFrame([], schema)
+        return empty_result(meta_index.spark, with_meta)
     joined = reduce(
         lambda a, b: a.join(b, "doc_id", "outer"), parts
     )

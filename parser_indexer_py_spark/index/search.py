@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.analyzer import analyze_text
 from ..functions.varint import decode_deltas, decode_varint
@@ -38,13 +39,43 @@ from .scoring import bm25_contrib
 
 _DECODED_SCHEMA = "term string, doc_id long, tf int, contrib double"
 
-# result-schema contract, single-sourced (wand.py and boolean.py build
-# empty results from these — a hand-restated copy is how the pruned
-# path's empty-result schema drifted in round 4)
+# result-schema contract, single-sourced (every empty result is built
+# by empty_result below — a hand-restated copy is how the pruned path's
+# empty-result schema drifted in round 4)
 SCORE_SCHEMA = "doc_id long, score double"
 META_SCHEMA = (
     "doc_id long, score double, conv_id string, turn_idx int, role string"
 )
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over rows the driver already holds (a pandas frame or
+    a list of tuples; ``schema`` a DDL string or StructType). Rows cross
+    into the JVM as one Arrow batch and become a ``LocalRelation``, so
+    collecting, joining or broadcasting the frame launches no Spark job —
+    a bare ``createDataFrame(list)`` is an RDD scan that costs one job on
+    every collect. Empty input is an empty ``LocalRelation`` too
+    (``limit(0)`` is optimized away with its RDD child)."""
+    if not len(rows):
+        return spark.createDataFrame([], schema).limit(0)
+    if not isinstance(rows, pd.DataFrame):
+        st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+        rows = pd.DataFrame.from_records(rows, columns=st.fieldNames())
+    return spark.createDataFrame(rows, schema)
+
+
+def empty_result(spark: SparkSession, with_meta: bool) -> DataFrame:
+    """Empty result with the SAME schema a non-empty call returns — a
+    caller selecting conv_id on an empty result must not crash."""
+    return local_frame(spark, [], META_SCHEMA if with_meta else SCORE_SCHEMA)
+
+
+def clamp_k(k: int, *indexes) -> int:
+    """``k`` bounded by the largest doc count among ``indexes``: no top-k
+    can hold more docs than exist, and Spark's TakeOrdered allocates a
+    buffer of 2k slots up front — ``limit(10**9)`` below the plan root
+    exhausts the driver heap."""
+    return min(int(k), max(int(ix.n_docs) for ix in indexes))
 
 
 @dataclass
@@ -222,7 +253,7 @@ def _docs_with_any(index: "Index", terms: list[str]) -> DataFrame:
     """Distinct doc_ids containing >= 1 of ``terms`` (docs-only decode of
     only those terms' blocks)."""
     if not terms:
-        return index.spark.createDataFrame([], "doc_id long")
+        return local_frame(index.spark, [], "doc_id long")
     return _decode(_blocks_for_terms(index, terms)).distinct()
 
 
@@ -380,8 +411,8 @@ def phrase_scores(
     makes the map lookup NULL and the intersect chain NULL, so presence
     checking is implicit — no separate n_terms filter."""
     spark = index.spark
-    empty = spark.createDataFrame(
-        [], "doc_id long, score double, phrase_freq int"
+    empty = local_frame(
+        spark, [], "doc_id long, score double, phrase_freq int"
     )
     if not tokens:
         return empty
@@ -443,8 +474,8 @@ def phrase_scores(
             & (F.col("doc_min") <= int(cand_arr[-1]))
         )
         if cand_arr.size <= PHRASE_BLOCK_JOIN_CAP:
-            cand_df = spark.createDataFrame(
-                [(int(c),) for c in cand_arr], "cand long"
+            cand_df = local_frame(
+                spark, pd.DataFrame({"cand": cand_arr}), "cand long"
             )
             others = others.join(
                 F.broadcast(cand_df),
@@ -542,7 +573,7 @@ def phrase_eval(
     topk = (
         scored.select("doc_id", "score", "phrase_freq")
         .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .limit(clamp_k(k, index))
     )
     if with_meta:
         meta = index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
@@ -764,7 +795,7 @@ def search(
     terms = sorted({t for g in groups for t in g})
     spark = index.spark
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_result(spark, with_meta)
     # Lucene liveDocs: deleted docs ride the existing exclude hook, so
     # BOTH evaluation modes (and every boolean delegation through here)
     # drop them before the top-k — scores of survivors are untouched
@@ -939,7 +970,9 @@ def full_eval(
         scored = scored.join(require, "doc_id", "left_semi")
     if exclude is not None:
         scored = scored.join(exclude, "doc_id", "left_anti")
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(
+        clamp_k(k, index)
+    )
     if with_meta:
         meta = index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
         topk = (
@@ -972,7 +1005,7 @@ def facet_counts(
     docs containing ANY query term, ordered (count desc, value asc)."""
     terms = sorted(set(analyze_text(query)))
     if not terms:
-        return index.spark.createDataFrame([], f"{field} string, n long")
+        return local_frame(index.spark, [], f"{field} string, n long")
     return (
         _docs_with_any(index, terms)
         .join(index.docmap.select("doc_id", field), "doc_id")
@@ -990,7 +1023,7 @@ def suggest(index: Index, prefix: str, count: int = 20) -> DataFrame:
     toks = analyze_text(prefix)
     p = toks[-1] if toks else ""
     if not p:
-        return index.spark.createDataFrame([], "term string, cf long")
+        return local_frame(index.spark, [], "term string, cf long")
     return (
         index.termstats.filter(F.col("term").startswith(p))
         .select("term", "cf")

@@ -81,6 +81,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .search import (
+    SCORE_SCHEMA,
+    _blocks_for_terms,
+    _decode,
+    clamp_k,
+    empty_result,
+    local_frame,
+)
+
 # Below this many total query-term postings, full evaluation beats pruning:
 # the decode is a handful of columnar partitions and one narrow shuffle,
 # while the pruned path costs 2-3 extra Spark jobs + driver round-trips
@@ -172,7 +181,7 @@ def _apply_block_selection(spark, blocks, selected, seg_aware: bool):
         if seg_aware
         else "term string, block_id int"
     )
-    sel_keys = spark.createDataFrame(selected[key_cols], key_schema)
+    sel_keys = local_frame(spark, selected[key_cols], key_schema)
     return blocks.join(F.broadcast(sel_keys), key_cols, "left_semi")
 
 
@@ -246,22 +255,13 @@ def block_max_topk(
     ``driver_cand_cap`` the driver-vs-distributed selection and handoff
     bounds. Seg-awareness is detected per field, so monolithic and
     segmented (MergedSegmentsView) indexes can mix."""
-    from .search import META_SCHEMA, SCORE_SCHEMA, _blocks_for_terms, _decode
-
     spark = meta_index.spark
     fields = [f for f, _, _ in sources]
+    k = clamp_k(k, meta_index)
     if driver_meta_cap is None:
         driver_meta_cap = DRIVER_META_ROW_CAP
     if driver_cand_cap is None:
         driver_cand_cap = DRIVER_CAND_CAP
-
-    def _empty():
-        # schema contract: an empty result must carry the SAME columns a
-        # non-empty call returns (a caller selecting conv_id must not
-        # crash — reachable from select's fast path on an OOV query)
-        return spark.createDataFrame(
-            [], META_SCHEMA if with_meta else SCORE_SCHEMA
-        )
 
     def _fallback(counter: str = "fallback"):
         PRUNE_STATS[counter] += 1
@@ -275,7 +275,8 @@ def block_max_topk(
     ])
     total_postings = int(sum(int(r["df"]) for r in st.collect()))
     if total_postings == 0:
-        return _empty()
+        # reachable from select's fast path on an OOV query
+        return empty_result(spark, with_meta)
     if total_postings <= cutover:
         return _fallback("cutover")
 
@@ -374,7 +375,9 @@ def block_max_topk(
         # Arrow-backed: a row-by-row tuple list costs ~100x the numpy
         # array's 8 MB at the 1M cap (round-4 ADVICE); a pandas frame
         # ships as Arrow batches, no per-row objects
-        cand_df = spark.createDataFrame(pd.DataFrame({"cand": candidates}))
+        cand_df = local_frame(
+            spark, pd.DataFrame({"cand": candidates}), "cand long"
+        )
         within = (F.col("cand") >= F.col("doc_min")) & (
             F.col("cand") <= F.col("doc_max")
         )
@@ -457,7 +460,7 @@ def block_max_topk(
         # ---- phase 1a: exact block selection on the driver ----------------
         meta = bmeta.toPandas()
         if not len(meta):
-            return _empty()
+            return empty_result(spark, with_meta)
         meta = meta.sort_values(
             ["sbound", "field", "term", "seg", "block_id"],
             ascending=[False, True, True, True, True],
@@ -552,9 +555,12 @@ def block_max_topk(
         # (R == 0 and the exclude/containment/mm filters emptied the
         # candidates) — the schema contract still applies (round-4
         # review, second pass)
-        return _empty()
-    out = spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in top], SCORE_SCHEMA
+        return empty_result(spark, with_meta)
+    # the top-k rows are already on the driver (``_finish`` collected
+    # them): they go back as a LocalRelation, so collecting the result
+    # re-runs nothing — only the with_meta docmap join launches a job
+    out = local_frame(
+        spark, [(r["doc_id"], r["score"]) for r in top], SCORE_SCHEMA
     )
     if with_meta:
         m = meta_index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
@@ -607,7 +613,6 @@ def search_pruned(
     from .search import (  # cycle-free
         _apply_boosts,
         _containment_filter,
-        _decode,
         _score_decoded,
         allowed_docs,
         full_eval,

@@ -413,14 +413,13 @@ def search_segments_df(
     path (round-2 verdict "What's missing #2" closed: between compactions
     the stream serves exactly what the batch index serves)."""
     from ..functions.analyzer import analyze_text
-    from ..index.search import search
+    from ..index.search import empty_result, search
     from .merged import MergedSegmentsView
 
-    spark = seg.spark
-    if not seg.commits() or not analyze_text(query):
-        return spark.createDataFrame([], "doc_id long, score double")
-    view = MergedSegmentsView(seg)
     search_kw.setdefault("with_meta", False)
+    if not seg.commits() or not analyze_text(query):
+        return empty_result(seg.spark, search_kw["with_meta"])
+    view = MergedSegmentsView(seg)
     return search(view, query, k=k, **search_kw)
 
 

@@ -313,3 +313,24 @@ def test_unanchored_now_bypasses_caches(cindex):
         assert after[name]["size"] == before[name]["size"] == 1, name
         assert after[name]["evictions"] == before[name]["evictions"] == 0
     caches.invalidate()
+
+
+def test_query_result_hit_launches_no_job(cindex, job_count):
+    """A queryResultCache hit is served from driver memory: the page
+    (page 2, inside page 1's window) is a LocalRelation whose collect
+    launches no Spark job, and it equals the uncached engine's rows with
+    the META_SCHEMA columns and types."""
+    from parser_indexer_py_spark.index.search import META_SCHEMA
+
+    caches = SearcherCaches(window=20, max_docs_cached=200)
+    q = "bace cedi"
+    caches.search(cindex, q, rows=5, start=0).collect()
+    hits = caches.query_result_cache.stats["hits"]
+    page2 = caches.search(cindex, q, rows=5, start=5)
+    assert caches.query_result_cache.stats["hits"] == hits + 1
+    n_jobs, got = job_count(page2.collect)
+    assert n_jobs == 0
+    eng = _page(boolean_search(cindex, q, k=10, with_meta=True))
+    assert [tuple(r) for r in got] == eng[5:10]
+    assert page2.schema == cindex.spark.createDataFrame([], META_SCHEMA).schema
+    caches.invalidate()

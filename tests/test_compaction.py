@@ -89,6 +89,30 @@ def test_merged_view_excerpts(spark, seg):
     assert rows and all("bace" in r["excerpt"].lower() for r in rows)
 
 
+def test_segment_empties_launch_no_job(
+    spark, seg, tmp_path_factory, job_count
+):
+    """A no-term query, an OOV pruned query over the merged view and a
+    query against a segment directory with no commits are answered on
+    the driver: an empty LocalRelation with the SCORE_SCHEMA/META_SCHEMA
+    contract, whose collect launches no Spark job."""
+    from parser_indexer_py_spark.index.search import META_SCHEMA, SCORE_SCHEMA
+
+    no_commits = SegmentedIndex(spark, str(tmp_path_factory.mktemp("none")))
+    for with_meta, schema in ((False, SCORE_SCHEMA), (True, META_SCHEMA)):
+        for df in (
+            search_segments_df(seg, "!!! ...", k=10, with_meta=with_meta),
+            search_segments_df(
+                seg, "zzzznotaterm", k=10, mode="pruned", full_cutover=0,
+                with_meta=with_meta,
+            ),
+            search_segments_df(no_commits, "bace", k=10, with_meta=with_meta),
+        ):
+            n_jobs, rows = job_count(df.collect)
+            assert (n_jobs, rows) == (0, [])
+            assert df.schema == spark.createDataFrame([], schema).schema
+
+
 def test_tiered_compaction_preserves_docids_and_scores(spark, seg):
     """compact_tiered is a postings-level merge: docIDs AND scores are
     IDENTICAL before and after (compact() renumbers; this must not)."""

@@ -366,24 +366,25 @@ def test_pruned_fallback_path(index, oracle):
 
 
 # Spark jobs one pruned call may launch on each forced path, per strategy:
-# the counts measured by this test on the code before keyword search and
-# DisMax shared one block-max engine. Job counts do not depend on the
-# host, so an added driver round-trip on any path fails here.
+# the counts this test measures, with the final top-k handed back as a
+# LocalRelation (its collect runs no job; the fallback ends in full_eval,
+# whose top-k is a Spark plan). Job counts do not depend on the host, so
+# an added driver round-trip on any path fails here.
 @pytest.mark.parametrize(
     "knobs, q_name, answered, budget",
     [
-        ({}, "q_single", "pass1", {"keyword": 10, "dismax": 12}),
+        ({}, "q_single", "pass1", {"keyword": 9, "dismax": 10}),
         (
             {"driver_meta_cap": 0}, "q_single", "pass1",
-            {"keyword": 15, "dismax": 16},
+            {"keyword": 13, "dismax": 14},
         ),
         (
             {"driver_cand_cap": 0}, "q_single", "pass1",
-            {"keyword": 12, "dismax": 14},
+            {"keyword": 11, "dismax": 12},
         ),
         (
             {"pool_target": 1}, "q_multi_or", "fallback",
-            {"keyword": 12, "dismax": 15},
+            {"keyword": 12, "dismax": 14},
         ),
     ],
     ids=["driver", "distributed_selection", "distributed_handoff", "fallback"],
@@ -416,6 +417,58 @@ def test_pruned_job_budget(index, oracle, job_count, knobs, q_name, answered,
         moved = {p for p in PRUNE_STATS if PRUNE_STATS[p] != before[p]}
         assert moved == {answered}, (strategy, moved)
         assert n_jobs <= budget[strategy], (strategy, n_jobs)
+
+
+def test_driver_side_empties_launch_no_job(index, job_count):
+    """Results the driver already knows are empty — a query that analyzes
+    to no terms, an OOV pruned query answered before any block is read —
+    come back as an empty LocalRelation: collecting launches no Spark job,
+    and the columns and types are the with_meta schema contract."""
+    from parser_indexer_py_spark.index.search import META_SCHEMA, SCORE_SCHEMA
+    from parser_indexer_py_spark.index.wand import PRUNE_STATS
+
+    spark = index.spark
+    for with_meta, schema in ((True, META_SCHEMA), (False, SCORE_SCHEMA)):
+        want = spark.createDataFrame([], schema).schema
+        before = dict(PRUNE_STATS)
+        for df in (
+            search(index, "!!! ...", k=10, with_meta=with_meta),
+            search(
+                index, "zzzznotaterm", k=10, mode="pruned", full_cutover=0,
+                with_meta=with_meta,
+            ),
+        ):
+            n_jobs, rows = job_count(df.collect)
+            assert (n_jobs, rows) == (0, [])
+            assert df.schema == want
+        # the pruned call was answered by the engine's empty result, not
+        # by a cutover or fallback to full evaluation
+        assert PRUNE_STATS == before
+
+
+def test_unbounded_k_returns_every_match(index, oracle):
+    """k far above the doc count (``k=10**9``, the facade's "all rows")
+    returns every match: top-k limits are clamped at the index's doc
+    count, so no TakeOrdered allocates a 2k-slot buffer."""
+    from parser_indexer_py_spark.index.boolean import edismax_qf
+
+    q = _queries(oracle)["q_multi_or"]
+    want = oracle.search(q, k=index.n_docs)
+    n_match = len(set().union(*(oracle.postings[t] for t in q.split())))
+    assert len(want) == n_match < index.n_docs
+    runs = {
+        "full": lambda: search(index, q, k=10**9, with_meta=False),
+        "pruned": lambda: search(
+            index, q, k=10**9, mode="pruned", full_cutover=0, with_meta=False
+        ),
+        "edismax_qf": lambda: edismax_qf(
+            {"text": index}, q, {"text": 1.0}, k=10**9, tie=0.0, mm=0,
+            with_meta=False,
+        ),
+    }
+    for name, run in runs.items():
+        got = [(r["doc_id"], r["score"]) for r in run().collect()]
+        assert got == want, name
 
 
 def test_score_ties_break_by_docid(spark, tmp_path_factory):
