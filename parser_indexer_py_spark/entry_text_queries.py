@@ -2693,7 +2693,9 @@ def q_embedding_near_dup_lsh(spark, sf_dir):
     # (CodegenFallback), ~192 boxed ops per candidate pair; one numpy
     # expression per batch does the same rounded-6dp dot/(|a||b|) in the
     # accepted float class (same story as the k-means matmul and the
-    # DuckDB SUM on the oracle side).
+    # DuckDB SUM on the oracle side). Non-deterministic to the optimizer:
+    # it never duplicates or re-evaluates the projection, e.g. by
+    # collapsing it into the cosine filter.
     @F.pandas_udf("double")
     def _cos_pairs(ea: pd.Series, eb: pd.Series) -> pd.Series:
         import numpy as np
@@ -2705,6 +2707,7 @@ def q_embedding_near_dup_lsh(spark, sf_dir):
         nb = np.sqrt((B * B).sum(axis=1))
         return pd.Series(np.round(dot / (na * nb), 6))
 
+    _cos_pairs = _cos_pairs.asNondeterministic()
     ea = emb.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea")
     )

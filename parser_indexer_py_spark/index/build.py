@@ -130,6 +130,103 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
+# docmap rows as build_index writes them (dkey is the partition column)
+DOCMAP_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("role", T.StringType()),
+        T.StructField("tool", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("dl", T.IntegerType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("dkey", T.IntegerType()),
+    ]
+)
+
+TERMSTATS_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("cf", T.LongType()),
+        T.StructField("idf", T.DoubleType()),
+        T.StructField("max_score", T.DoubleType()),
+        T.StructField("bucket", T.IntegerType()),
+    ]
+)
+
+TOMBSTONE_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
+
+
+def _read_back(schema: T.StructType, partition_col: str | None = None):
+    """``schema`` as Spark reads the written parquet table back: every
+    field nullable, the partition column last."""
+    fields = sorted(schema.fields, key=lambda f: f.name == partition_col)
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in fields]
+    )
+
+
+# Each table's Spark schema, recorded in globals.json ("schemas") by the
+# writer that commits the table: readers open it with
+# spark.read.schema(...), which reads no parquet footer — inferring a
+# schema costs one Spark job per table per open.
+TABLE_SCHEMAS = {
+    "docmap": DOCMAP_SCHEMA,
+    "postings": _read_back(POSTINGS_SCHEMA, "bucket"),
+    "termstats": TERMSTATS_SCHEMA,
+}
+
+
+def open_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
+    """The one reader of index tables. ``schema`` is the table's recorded
+    schema (a StructType or its JSON): opening launches no Spark job.
+    None — an index committed before schemas were recorded — falls back
+    to footer inference."""
+    if schema is None:
+        return spark.read.parquet(path)
+    if isinstance(schema, dict):
+        schema = T.StructType.fromJson(schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _write_json(path: str, obj: dict) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _write_globals(
+    path: str, n_docs: int, avgdl: float, n_buckets: int, positions: bool
+) -> None:
+    """globals.json: the corpus statistics and every table's schema."""
+    _write_json(
+        path,
+        {
+            "n_docs": n_docs,
+            "avgdl": avgdl,
+            "k1": BM25_K1,
+            "b": BM25_B,
+            "n_buckets": n_buckets,
+            "block_size": BLOCK_SIZE,
+            "positions": positions,
+            "schemas": {k: s.jsonValue() for k, s in TABLE_SCHEMAS.items()},
+        },
+    )
+
+
+def record_schema(paths: "IndexPaths", table: str, schema: T.StructType) -> None:
+    """Add one table's schema to an existing globals.json (a writer that
+    commits a table after the build, e.g. the first tombstones)."""
+    with open(paths.globals_json) as f:
+        g = json.load(f)
+    if g.get("schemas", {}).get(table) != schema.jsonValue():
+        g.setdefault("schemas", {})[table] = schema.jsonValue()
+        _write_json(paths.globals_json, g)
+
+
 def term_bucket(term: str, n_buckets: int) -> int:
     """Python twin of the JVM bucket expression (F.crc32 == zlib.crc32)."""
     return zlib.crc32(term.encode("utf-8")) % n_buckets
@@ -551,7 +648,7 @@ def build_index(
                 t0r = time.time()
                 transcripts.write.mode("overwrite").parquet(paths.raw)
                 man.add("raw", seconds=time.time() - t0r)
-            src = spark.read.parquet(paths.raw)
+            src = open_table(spark, paths.raw, _read_back(transcripts.schema))
         staged = (
             src.repartitionByRange(P, "conv_id", "turn_idx")
             .sortWithinPartitions("conv_id", "turn_idx")
@@ -656,21 +753,13 @@ def build_index(
             docmap.write.mode("overwrite").partitionBy("dkey").parquet(paths.docmap)
             if not man.done("globals"):
                 og = obs.get
-                with open(paths.globals_json, "w") as f:
-                    json.dump(
-                        {
-                            "n_docs": og["n_docs"],
-                            # exact int sum / count: deterministic at any
-                            # partitioning, oracle-reproducible
-                            "avgdl": float(og["sum_dl"]) / float(og["n_docs"]),
-                            "k1": BM25_K1,
-                            "b": BM25_B,
-                            "n_buckets": n_buckets,
-                            "block_size": BLOCK_SIZE,
-                            "positions": positions,
-                        },
-                        f,
-                    )
+                # exact int sum / count: deterministic at any
+                # partitioning, oracle-reproducible
+                _write_globals(
+                    paths.globals_json, og["n_docs"],
+                    float(og["sum_dl"]) / float(og["n_docs"]),
+                    n_buckets, positions,
+                )
                 man.add("globals", seconds=0.0)
             try:
                 input_files = [f.split("/")[-1] for f in src.inputFiles()][:8]
@@ -692,7 +781,7 @@ def build_index(
         finally:
             staged.unpersist()
 
-    docmap = spark.read.parquet(paths.docmap)
+    docmap = open_table(spark, paths.docmap, TABLE_SCHEMAS["docmap"])
 
     # ---- global stats -------------------------------------------------------
     if not man.done("globals"):
@@ -700,21 +789,12 @@ def build_index(
         g = docmap.agg(
             F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
         ).collect()[0]
-        with open(paths.globals_json, "w") as f:
-            json.dump(
-                {
-                    "n_docs": g["n_docs"],
-                    # exact: integer sum / count — deterministic at any
-                    # partitioning, reproducible by the pure-Python oracle
-                    "avgdl": float(g["sum_dl"]) / float(g["n_docs"]),
-                    "k1": BM25_K1,
-                    "b": BM25_B,
-                    "n_buckets": n_buckets,
-                    "block_size": BLOCK_SIZE,
-                    "positions": positions,
-                },
-                f,
-            )
+        # exact: integer sum / count — deterministic at any partitioning,
+        # reproducible by the pure-Python oracle
+        _write_globals(
+            paths.globals_json, g["n_docs"],
+            float(g["sum_dl"]) / float(g["n_docs"]), n_buckets, positions,
+        )
         man.add("globals", seconds=time.time() - t0)
     with open(paths.globals_json) as f:
         gstats = json.load(f)
@@ -804,7 +884,7 @@ def build_fielded_indexes(
 
 def _write_termstats(spark: SparkSession, paths: IndexPaths) -> None:
     ts = (
-        spark.read.parquet(paths.postings)
+        open_table(spark, paths.postings, TABLE_SCHEMAS["postings"])
         .groupBy("term")
         .agg(
             F.first("df").alias("df"),
@@ -865,37 +945,33 @@ def merge_indexes(
 
     t0 = time.time()
     # docmap: union with shifted docIDs (metadata-only rewrite; no analyzer)
+    def source(root: str, g: dict, table: str) -> DataFrame:
+        return open_table(
+            spark, getattr(IndexPaths(root), table),
+            g.get("schemas", {}).get(table),
+        )
+
     dms = [
-        spark.read.parquet(IndexPaths(root).docmap).withColumn(
+        source(root, g, "docmap").withColumn(
             "doc_id", F.col("doc_id") + F.lit(int(off))
         )
-        for root, off in sources
+        for (root, off), g in zip(sources, gl)
     ]
     dm = dms[0]
     for d in dms[1:]:
         dm = dm.unionByName(d)
-    dm.write.mode("overwrite").partitionBy("dkey").parquet(paths.docmap)
+    dm.select(*TABLE_SCHEMAS["docmap"].fieldNames()).write.mode(
+        "overwrite"
+    ).partitionBy("dkey").parquet(paths.docmap)
 
-    with open(paths.globals_json, "w") as f:
-        json.dump(
-            {
-                "n_docs": n_docs,
-                "avgdl": avgdl,
-                "k1": BM25_K1,
-                "b": BM25_B,
-                "n_buckets": n_buckets,
-                "block_size": BLOCK_SIZE,
-                "positions": positions,
-            },
-            f,
-        )
+    _write_globals(paths.globals_json, n_docs, avgdl, n_buckets, positions)
 
     # postings: per-source blocks are the pre-encoded runs
     run_cols = ["term", "n", "docs_bin", "tfs_bin", "dls_bin", "pos_bin"]
     runs = None
-    for root, off in sources:
+    for (root, off), g in zip(sources, gl):
         r = (
-            spark.read.parquet(IndexPaths(root).postings)
+            source(root, g, "postings")
             .select(*run_cols)
             .withColumn("base", F.lit(int(off)).cast("long"))
         )

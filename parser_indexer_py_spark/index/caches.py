@@ -271,17 +271,11 @@ class SearcherCaches:
             else:
                 out[i] = v
         if missing:
-            from pyspark.sql import functions as F
+            from .search import stored_fields
 
-            rows = (
-                index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
-                .filter(F.col("doc_id").isin(missing))
-                .collect()
-            )
-            for r in rows:
-                v = (r["conv_id"], r["turn_idx"], r["role"])
-                self.document_cache.put(int(r["doc_id"]), v)
-                out[int(r["doc_id"])] = v
+            for i, v in stored_fields(index, missing).items():
+                self.document_cache.put(i, v)
+                out[i] = v
         return out
 
     # -- queryResultCache ---------------------------------------------------

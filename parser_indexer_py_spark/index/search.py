@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -34,7 +34,7 @@ from pyspark.sql.types import StructType
 
 from ..functions.analyzer import analyze_text
 from ..functions.varint import decode_deltas, decode_varint
-from .build import IndexPaths, term_bucket
+from .build import IndexPaths, open_table, term_bucket
 from .scoring import bm25_contrib
 
 _DECODED_SCHEMA = "term string, doc_id long, tf int, contrib double"
@@ -80,52 +80,94 @@ def clamp_k(k: int, *indexes) -> int:
 
 @dataclass
 class Index:
+    """One committed index: corpus statistics from globals.json, and its
+    tables, each opened once with its recorded schema (no Spark job) and
+    held. A table directory that changed since it was opened — a docmap
+    partition swapped in by ``update_docmap``, a tombstone generation
+    added by ``delete_docs`` — is opened again on the next access, so
+    those writes are visible without reloading the Index."""
+
     spark: SparkSession
     paths: IndexPaths
     n_docs: int
     avgdl: float
     n_buckets: int
     positions: bool = False
+    schemas: dict = field(default_factory=dict)  # globals.json "schemas"
     _cached: dict = None  # populated by .cache()
+    _open: dict = field(default_factory=dict, repr=False)
+
+    def _table(self, name: str) -> "DataFrame | None":
+        """Table ``name`` as held for its directory's current state (the
+        directory mtime); None for an absent or empty tombstones dir."""
+        if self._cached and name in self._cached:
+            return self._cached[name]
+        path = getattr(self.paths, name)
+        try:
+            gen = os.stat(path).st_mtime_ns
+        except FileNotFoundError:
+            if name == "tombstones":
+                return None
+            raise
+        held = self._open.get(name)
+        if held is None or held[0] != gen:
+            df = None
+            if name != "tombstones" or any(
+                f.endswith(".parquet") for f in os.listdir(path)
+            ):
+                df = open_table(self.spark, path, self.schemas.get(name))
+            held = self._open[name] = (gen, df)
+        return held[1]
 
     @property
     def postings(self) -> DataFrame:
-        if self._cached:
-            return self._cached["postings"]
-        return self.spark.read.parquet(self.paths.postings)
+        return self._table("postings")
 
     @property
     def termstats(self) -> DataFrame:
-        if self._cached:
-            return self._cached["termstats"]
-        return self.spark.read.parquet(self.paths.termstats)
+        return self._table("termstats")
 
     @property
     def docmap(self) -> DataFrame:
-        if self._cached:
-            return self._cached["docmap"]
-        return self.spark.read.parquet(self.paths.docmap)
+        return self._table("docmap")
 
     @property
     def tombstones(self) -> "DataFrame | None":
         """Deleted doc_ids (Lucene liveDocs analog, index/update.py
-        delete_docs): a distinct doc_id DataFrame, or None when nothing
-        was ever deleted. Read fresh from disk on every access — a
-        delete is visible to the next query without reloading the Index
-        (Solr's commit-then-newSearcher made cheap by parquet file
-        listing). Deleted docs vanish from every match set / top-k;
-        term statistics (df/cf, termstats-backed surfaces: spellcheck,
-        suggest, /terms) stay STALE until a compaction rewrites the
-        segment — exactly Lucene's semantics, where liveDocs filter
-        postings iteration but docFreq ignores deletions until merge."""
-        import glob as _glob
+        delete_docs), or None when nothing was ever deleted. Ids may
+        repeat across generations: every consumer semi/anti-joins on
+        them. A delete is visible to the next query without reloading
+        the Index (Solr's commit-then-newSearcher made cheap by a
+        directory stat). Deleted docs vanish from every match set /
+        top-k; term statistics (df/cf, termstats-backed surfaces:
+        spellcheck, suggest, /terms) stay STALE until a compaction
+        rewrites the segment — exactly Lucene's semantics, where liveDocs
+        filter postings iteration but docFreq ignores deletions until
+        merge."""
+        return self._table("tombstones")
 
-        d = self.paths.tombstones
-        if not _glob.glob(os.path.join(d, "*.parquet")):
-            return None
-        return (
-            self.spark.read.parquet(d).select("doc_id").distinct()
+    def blocks_for_terms(self, terms: list[str]) -> DataFrame:
+        """The postings blocks of ``terms``: bucket partitions pruned,
+        the term predicate pushed to the scan."""
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+        return self.postings.filter(
+            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
         )
+
+    def term_stats(self, terms: list[str]) -> dict:
+        """``{term: (df, cf, idf)}`` for the ``terms`` present: one
+        termstats point lookup (a MergedSegmentsView answers the same
+        call from its segments). The one lookup behind WAND's cutover,
+        conjunctive pruning and phrase idf."""
+        rows = (
+            self.termstats.filter(F.col("term").isin(list(terms)))
+            .select("term", "df", "cf", "idf")
+            .collect()
+        )
+        return {
+            r["term"]: (int(r["df"]), int(r["cf"]), float(r["idf"]))
+            for r in rows
+        }
 
     def cache(self) -> "Index":
         """Pin the index tables in executor memory for query-heavy
@@ -133,9 +175,8 @@ class Index:
         analog). Partition pruning on `bucket` still applies — the cache
         keys on the partitioned scan."""
         self._cached = {
-            "postings": self.spark.read.parquet(self.paths.postings).cache(),
-            "termstats": self.spark.read.parquet(self.paths.termstats).cache(),
-            "docmap": self.spark.read.parquet(self.paths.docmap).cache(),
+            name: self._table(name).cache()
+            for name in ("postings", "termstats", "docmap")
         }
         return self
 
@@ -151,8 +192,22 @@ def load_index(spark: SparkSession, root: str) -> Index:
         g = json.load(f)
     return Index(
         spark, paths, g["n_docs"], g["avgdl"], g["n_buckets"],
-        g.get("positions", False),
+        g.get("positions", False), g.get("schemas", {}),
     )
+
+
+def stored_fields(index, ids) -> dict:
+    """``{doc_id: (conv_id, turn_idx, role)}`` for ``ids``: one pushed
+    ``doc_id IN (...)`` docmap lookup (Lucene's stored fields by docID)."""
+    rows = (
+        index.docmap.select("doc_id", "conv_id", "turn_idx", "role")
+        .filter(F.col("doc_id").isin([int(i) for i in ids]))
+        .collect()
+    )
+    return {
+        int(r["doc_id"]): (r["conv_id"], r["turn_idx"], r["role"])
+        for r in rows
+    }
 
 
 def _block_docs(pdf: pd.DataFrame) -> np.ndarray:
@@ -422,13 +477,9 @@ def phrase_scores(
             "(build_index(..., positions=True))"
         )
     terms = sorted(set(tokens))
-    srows = (
-        index.termstats.filter(F.col("term").isin(terms))
-        .select("term", "idf", "df")
-        .collect()
-    )
-    stats = {r["term"]: float(r["idf"]) for r in srows}
-    dfs = {r["term"]: int(r["df"]) for r in srows}
+    st = index.term_stats(terms)
+    stats = {t: idf for t, (_, _, idf) in st.items()}
+    dfs = {t: df for t, (df, _, _) in st.items()}
     if any(t not in stats for t in terms):
         return empty  # a phrase token with df=0 can never match
     # one addend per token instance, query order (oracle mirrors this)
@@ -688,10 +739,10 @@ def allowed_docs(index: Index, role: str | None, filters: dict | None):
 
 
 def _blocks_for_terms(index: Index, terms: list[str]) -> DataFrame:
-    buckets = sorted({term_bucket(t, index.n_buckets) for t in terms})
-    return index.postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    """The one source of a query's postings blocks: an Index filters its
+    postings; a MergedSegmentsView unions its segments' filtered scans
+    under driver-merged term statistics (streaming/merged.py)."""
+    return index.blocks_for_terms(terms)
 
 
 def search(
@@ -893,12 +944,7 @@ def full_eval(
     # term PER GROUP, not every term.
     cand_arr = None
     if conjunctive and groups is None and len(terms) > 1:
-        dfs = {
-            r["term"]: int(r["df"])
-            for r in index.termstats.filter(F.col("term").isin(terms))
-            .select("term", "df")
-            .collect()
-        }
+        dfs = {t: df for t, (df, _, _) in index.term_stats(terms).items()}
         if len(dfs) == len(terms):  # every term exists (else no pruning;
             rare = min(terms, key=lambda t: dfs[t])  # n_terms filter wins)
             if (

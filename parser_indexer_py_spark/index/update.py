@@ -28,7 +28,14 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import Observation
 
-from .build import DOCMAP_PARTS, IndexPaths, Manifest, docmap_dkey
+from .build import (
+    DOCMAP_PARTS,
+    TOMBSTONE_SCHEMA,
+    IndexPaths,
+    Manifest,
+    docmap_dkey,
+    record_schema,
+)
 
 UPDATABLE = ("role", "tool", "ts")
 
@@ -138,8 +145,11 @@ def update_docmap(
     merged = merged.withColumn("_upd", any_update.cast("long"))
     for c in UPDATABLE:
         if f"_new_{c}" in merged.columns:
+            # the stored column's type: the rewritten partitions keep
+            # the schema globals.json records for the docmap
+            new_val = F.col(f"_new_{c}").cast(docmap.schema[c].dataType)
             merged = merged.withColumn(
-                c, F.coalesce(F.col(f"_new_{c}"), F.col(c))
+                c, F.coalesce(new_val, F.col(c))
             ).drop(f"_new_{c}")
     obs = Observation(f"docmap_update_{time.time_ns()}")
     merged = merged.observe(obs, F.sum("_upd").alias("n")).drop("_upd")
@@ -252,6 +262,8 @@ def delete_docs(
             )
             moved += 1
     shutil.rmtree(staging, ignore_errors=True)
+    if os.path.exists(paths.globals_json):
+        record_schema(paths, "tombstones", TOMBSTONE_SCHEMA)
     man = Manifest(paths.manifest)
     man.add(f"delete_docs_{gen}", rows_deleted=int(n), generation=int(gen))
     return int(n)

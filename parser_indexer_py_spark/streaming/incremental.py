@@ -267,7 +267,7 @@ class SegmentedIndex:
         positions = True  # rebuild keeps positions iff every segment has them
         for c in commits:
             seg_idx = load_index(self.spark, c["dir"])
-            dm = self.spark.read.parquet(os.path.join(c["dir"], "docmap"))
+            dm = seg_idx.docmap
             # forceMerge(1) reclaims deletions (Lucene merge semantics):
             # tombstoned docs are dropped from the rebuild, so the
             # compacted segment's df/cf/avgdl reflect live docs only and

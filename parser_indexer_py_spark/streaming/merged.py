@@ -17,25 +17,38 @@ Global correctness rules (everything a query consumes):
 - ``docmap``: union of per-segment docmaps with docIDs offset by the
   segment's commit ``base`` — global ids, so fq semi-joins / meta joins /
   excerpt text joins work unchanged.
-- ``termstats``: per-term df/cf summed across segments (a doc lives in
-  exactly one segment), idf REcomputed from merged df with the canonical
-  ``bm25_idf`` (Python ``math.log`` in an Arrow batch — bit-identical to
-  the monolithic build; a JVM ``ln`` could differ by 1 ulp and break exact
-  score identity).
-- ``postings``: union of per-segment blocks carrying ``base`` (docID
-  offset, applied inside the Arrow decoders) and ``seg`` (selection key for
-  the pruned path), ``doc_min``/``doc_max`` offset to global ids, per-term
-  ``df``/``cf``/``idf`` replaced by the merged values (term-pruned join —
-  Catalyst pushes the query's term predicate to both sides), and
-  ``block_max_score`` recomputed from the stats-independent per-block
-  extremes (``block_tf_max``, ``block_dl_min``) under the MERGED (idf,
-  avgdl). The recomputed bound is valid because ``bm25_contrib`` is
-  composed of weakly-monotone IEEE ops: contrib(tf_max, dl_min) evaluated
-  by the same code is >= every entry's contrib in the block.
+- ``tombstones``: every segment's deletes, resolved ONCE when the view
+  is built and rebased — one delete state for every read of the view
+  (Solr serves a request from one searcher); the next view sees later
+  deletes.
+- per-term stats (:meth:`MergedSegmentsView.term_stats`): the query
+  terms' per-segment termstats rows, fetched in one collect, and merged
+  on the driver — df/cf summed (a doc lives in exactly one segment), idf
+  REcomputed from the merged df with the canonical ``bm25_idf`` (Python
+  ``math.log``, bit-identical to the monolithic build; a JVM ``ln`` could
+  differ by 1 ulp and break exact score identity). Memoized per view and
+  term set, so a query's cutover, block scan, phrase idf and conjunctive
+  pruning share one lookup.
+- query blocks (:meth:`MergedSegmentsView.blocks_for_terms`, the view's
+  half of ``search._blocks_for_terms``): the union of each segment's
+  bucket- and term-filtered block scan, carrying ``base`` (docID offset,
+  applied inside the Arrow decoders) and ``seg`` (selection key for the
+  pruned path), ``doc_min``/``doc_max`` offset to global ids, per-term
+  ``df``/``cf``/``idf`` attached as literals from the merged stats (no
+  groupBy, no shuffle join), and ``block_max_score`` recomputed from the
+  stats-independent per-block extremes (``block_tf_max``,
+  ``block_dl_min``) under the MERGED (idf, avgdl). The recomputed bound
+  is valid because ``bm25_contrib`` is composed of weakly-monotone IEEE
+  ops: contrib(tf_max, dl_min) evaluated by the same code is >= every
+  entry's contrib in the block.
+- ``termstats``: the full merged vocabulary (one groupBy), only for
+  callers that scan the term dictionary (prefix, fuzzy, suggest,
+  /terms).
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from functools import reduce
 
 import numpy as np
@@ -54,8 +67,9 @@ class MergedSegmentsView:
         view = MergedSegmentsView(seg)
         search(view, "query", k=10, mode="pruned", filters={...})
 
-    Cheap to construct (reads only the commit log + per-segment
-    globals.json); all heavy work stays in the lazily-built DataFrames.
+    Cheap to construct (reads the commit log, per-segment globals.json
+    and tombstone listings; no Spark job); all heavy work stays in the
+    lazily-built DataFrames.
     """
 
     def __init__(self, seg) -> None:
@@ -120,7 +134,16 @@ class MergedSegmentsView:
         # property access within one query reuses the analyzed plan
         self._docmap_df = None
         self._termstats_df = None
-        self._postings_df = None
+        self._stats: dict = {}  # sorted query terms -> term_stats
+        # one delete state per view: every segment's deleted doc_ids
+        # (Lucene liveDocs, see Index.tombstones), listed now and rebased
+        # into the merged docID space; None when no segment has deletes
+        parts = [
+            ts.withColumn("doc_id", F.col("doc_id") + F.lit(int(c["base"])))
+            for c, idx in self._segs
+            if (ts := idx.tombstones) is not None
+        ]
+        self.tombstones = reduce(DataFrame.unionByName, parts) if parts else None
 
     @staticmethod
     def _load(spark, d: str):
@@ -141,22 +164,6 @@ class MergedSegmentsView:
         ]
         self._docmap_df = reduce(DataFrame.unionByName, parts)
         return self._docmap_df
-
-    # -- tombstones -----------------------------------------------------------
-    @property
-    def tombstones(self) -> "DataFrame | None":
-        """Per-segment deleted doc_ids (Lucene liveDocs, see
-        Index.tombstones), rebased into the merged docID space — a
-        delete against any underlying segment root is honored by every
-        query through the view. None when no segment has deletes."""
-        parts = [
-            ts.withColumn("doc_id", F.col("doc_id") + F.lit(int(c["base"])))
-            for c, idx in self._segs
-            if (ts := idx.tombstones) is not None
-        ]
-        if not parts:
-            return None
-        return reduce(DataFrame.unionByName, parts)
 
     # -- termstats ------------------------------------------------------------
     @property
@@ -185,11 +192,31 @@ class MergedSegmentsView:
         self._termstats_df = merged.withColumn("idf", _idf("df"))
         return self._termstats_df
 
+    def term_stats(self, terms: list[str]) -> dict:
+        """``{term: (df, cf, idf)}`` over all segments for the ``terms``
+        present: one collect of their per-segment termstats rows, summed
+        and idf'd on the driver."""
+        key = tuple(sorted(set(terms)))
+        if key not in self._stats:
+            rows = reduce(DataFrame.unionByName, [
+                idx.termstats.filter(F.col("term").isin(list(key)))
+                .select("term", "df", "cf")
+                for _, idx in self._segs
+            ]).collect()
+            df, cf = Counter(), Counter()
+            for r in rows:
+                df[r["term"]] += int(r["df"])
+                cf[r["term"]] += int(r["cf"])
+            self._stats[key] = {
+                t: (df[t], cf[t], bm25_idf(df[t], self.n_docs)) for t in df
+            }
+        return self._stats[key]
+
     # -- postings ---------------------------------------------------------------
-    @property
-    def postings(self) -> DataFrame:
-        if self._postings_df is not None:
-            return self._postings_df
+    def blocks_for_terms(self, terms: list[str]) -> DataFrame:
+        """The query's blocks across segments, under the merged stats
+        (module docstring)."""
+        stats = self.term_stats(terms)
         avgdl = self.avgdl
 
         @F.pandas_udf("double")
@@ -204,26 +231,36 @@ class MergedSegmentsView:
                 * idf.to_numpy(dtype=np.float64)
             )
 
+        def merged(i: int, dtype: str):
+            if not stats:
+                return F.lit(None).cast(dtype)
+            by_term = F.create_map(*[
+                x for t, v in sorted(stats.items())
+                for x in (F.lit(t), F.lit(v[i]))
+            ])
+            return by_term[F.col("term")].cast(dtype)
+
         parts = []
         for i, (c, idx) in enumerate(self._segs):
             base = int(c["base"])
             parts.append(
-                idx.postings.drop("df", "cf", "idf", "block_max_score")
+                idx.blocks_for_terms(terms)
+                .drop("df", "cf", "idf", "block_max_score")
                 .withColumn("seg", F.lit(i))
                 .withColumn("base", F.lit(base))
                 .withColumn("doc_min", F.col("doc_min") + F.lit(base))
                 .withColumn("doc_max", F.col("doc_max") + F.lit(base))
             )
-        blocks = reduce(DataFrame.unionByName, parts)
-        stats = self.termstats.select("term", "df", "cf", "idf")
-        # term-equi join: the query's term IN-list predicate pushes to both
-        # sides, so per query this joins a handful of blocks against a
-        # handful of termstats rows (AQE broadcasts the filtered side)
-        self._postings_df = blocks.join(stats, "term").withColumn(
-            "block_max_score",
-            _bound("block_tf_max", "block_dl_min", "idf"),
+        return (
+            reduce(DataFrame.unionByName, parts)
+            .withColumn("df", merged(0, "long"))
+            .withColumn("cf", merged(1, "long"))
+            .withColumn("idf", merged(2, "double"))
+            .withColumn(
+                "block_max_score",
+                _bound("block_tf_max", "block_dl_min", "idf"),
+            )
         )
-        return self._postings_df
 
     # Index-API compatibility shims -------------------------------------------
     def cache(self):

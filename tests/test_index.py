@@ -369,22 +369,23 @@ def test_pruned_fallback_path(index, oracle):
 # the counts this test measures, with the final top-k handed back as a
 # LocalRelation (its collect runs no job; the fallback ends in full_eval,
 # whose top-k is a Spark plan). Job counts do not depend on the host, so
-# an added driver round-trip on any path fails here.
+# an added driver round-trip on any path fails here. with_meta may add
+# one job: the stored-field fetch by docID.
 @pytest.mark.parametrize(
     "knobs, q_name, answered, budget",
     [
-        ({}, "q_single", "pass1", {"keyword": 9, "dismax": 10}),
+        ({}, "q_single", "pass1", {"keyword": 6, "dismax": 7}),
         (
             {"driver_meta_cap": 0}, "q_single", "pass1",
-            {"keyword": 13, "dismax": 14},
-        ),
-        (
-            {"driver_cand_cap": 0}, "q_single", "pass1",
             {"keyword": 11, "dismax": 12},
         ),
         (
+            {"driver_cand_cap": 0}, "q_single", "pass1",
+            {"keyword": 9, "dismax": 10},
+        ),
+        (
             {"pool_target": 1}, "q_multi_or", "fallback",
-            {"keyword": 12, "dismax": 14},
+            {"keyword": 8, "dismax": 10},
         ),
     ],
     ids=["driver", "distributed_selection", "distributed_handoff", "fallback"],
@@ -392,31 +393,35 @@ def test_pruned_fallback_path(index, oracle):
 def test_pruned_job_budget(index, oracle, job_count, knobs, q_name, answered,
                            budget):
     """Keyword search and single-field DisMax (qf text^1, tie 0, mm 0 —
-    keyword search IS one-field DisMax) on each forced path: the oracle's
-    rows, the named path, and no more Spark jobs than the budget."""
+    keyword search IS one-field DisMax) on each forced path, with and
+    without stored fields: the oracle's rows, the named path, and no more
+    Spark jobs than the budget."""
     from parser_indexer_py_spark.index.boolean import edismax_qf
     from parser_indexer_py_spark.index.wand import PRUNE_STATS
 
     q = _queries(oracle)[q_name]
     runs = {
-        "keyword": lambda: search(
-            index, q, k=10, mode="pruned", full_cutover=0, with_meta=False,
-            **knobs,
+        "keyword": lambda with_meta: search(
+            index, q, k=10, mode="pruned", full_cutover=0,
+            with_meta=with_meta, **knobs,
         ),
-        "dismax": lambda: edismax_qf(
+        "dismax": lambda with_meta: edismax_qf(
             {"text": index}, q, {"text": 1.0}, k=10, tie=0.0, mm=0,
-            mode="pruned", full_cutover=0, with_meta=False, **knobs,
+            mode="pruned", full_cutover=0, with_meta=with_meta, **knobs,
         ),
     }
     for strategy, run in runs.items():
-        before = dict(PRUNE_STATS)
-        n_jobs, rows = job_count(
-            lambda: [(r["doc_id"], r["score"]) for r in run().collect()]
-        )
-        assert rows == oracle.search(q, k=10), strategy
-        moved = {p for p in PRUNE_STATS if PRUNE_STATS[p] != before[p]}
-        assert moved == {answered}, (strategy, moved)
-        assert n_jobs <= budget[strategy], (strategy, n_jobs)
+        for with_meta in (False, True):
+            before = dict(PRUNE_STATS)
+            n_jobs, rows = job_count(
+                lambda: [tuple(r) for r in run(with_meta).collect()]
+            )
+            assert [r[:2] for r in rows] == oracle.search(q, k=10), strategy
+            moved = {p for p in PRUNE_STATS if PRUNE_STATS[p] != before[p]}
+            assert moved == {answered}, (strategy, moved)
+            assert n_jobs <= budget[strategy] + with_meta, (
+                strategy, with_meta, n_jobs,
+            )
 
 
 def test_driver_side_empties_launch_no_job(index, job_count):

@@ -106,3 +106,32 @@ def test_no_bare_create_dataframe_on_the_query_path():
                 and node.lineno not in inside
             ]
     assert offenders == [], offenders
+
+
+def test_index_tables_open_through_open_table():
+    """Source audit: under index/ and streaming/ only ``build.open_table``
+    may call ``spark.read.parquet`` — a bare read infers the schema from
+    the parquet footers, one Spark job per table per open, where the
+    recorded schema costs none. ``index/update.py`` is the write path."""
+    allowed = {"index/update.py"}
+    offenders = []
+    for sub in ("index", "streaming"):
+        for path in sorted((PKG / sub).glob("*.py")):
+            rel = f"{sub}/{path.name}"
+            if rel in allowed:
+                continue
+            tree = ast.parse(path.read_text())
+            inside = set()
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name == "open_table":
+                    inside |= set(range(node.lineno, node.end_lineno + 1))
+            offenders += [
+                f"{rel}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Attribute)
+                and node.attr == "parquet"
+                and isinstance(node.value, ast.Attribute)
+                and node.value.attr == "read"
+                and node.lineno not in inside
+            ]
+    assert offenders == [], offenders

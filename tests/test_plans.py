@@ -105,6 +105,28 @@ def test_ann_signature_paths_have_no_posexplode(spark):
         assert "MapInPandas" in plan, plan[:1500]
 
 
+def test_cos_pairs_verify_udf_is_nondeterministic_and_runs_once(spark):
+    """The LSH near-dup cosine verify is a pandas_udf the optimizer must
+    not duplicate or re-evaluate: it is marked non-deterministic, and the
+    plan evaluates it in exactly one Arrow eval node."""
+    from parser_indexer_py_spark import entry_text_queries as TQ
+
+    def walk(node):
+        yield node
+        ch = node.children()
+        for i in range(ch.size()):
+            yield from walk(ch.apply(i))
+
+    df = TQ.q_embedding_near_dup_lsh(spark, SF)
+    udfs = [
+        (u.name(), u.deterministic())
+        for n in walk(df._jdf.queryExecution().optimizedPlan())
+        if n.nodeName() == "ArrowEvalPython"
+        for u in (n.udfs().apply(i) for i in range(n.udfs().size()))
+    ]
+    assert udfs == [("_cos_pairs", False)], udfs
+
+
 def test_boolean_plans(spark, tmp_path):
     """Boolean-layer physical plans: the top-k is a distributed heap
     (TakeOrderedAndProject, not a global sort); constant-score/exclusion
