@@ -75,7 +75,6 @@ from .search import (
     Index,
     _apply_boosts,
     _attach_excerpts,
-    _blocks_for_terms,
     _decode,
     _docs_with_any,
     _score_decoded,
@@ -438,7 +437,7 @@ def _scored_docs_raw(
     pos_terms = sorted(set(pq.should_terms) | set(pq.must_terms))
     term_piece_has_ns = False
     if pos_terms:
-        decoded = _decode(_blocks_for_terms(index, pos_terms), index.avgdl)
+        decoded = _decode(index.blocks_for_terms(pos_terms), index.avgdl)
         # clause boosts multiply the per-term contrib BEFORE the
         # deterministic fold — the SHARED _apply_boosts expression, so
         # this path, the WAND delegation, and the oracle use one float
@@ -550,7 +549,7 @@ def _scored_docs_raw(
         # match-any over repeated values, ascending-token fold, stable
         # docIDs align it with the main index's docs
         fidx = field_indexes[f]
-        fdec = _decode(_blocks_for_terms(fidx, toks), fidx.avgdl)
+        fdec = _decode(fidx.blocks_for_terms(toks), fidx.avgdl)
         pieces.append(
             (True, _score_decoded(fdec).select("doc_id", "score"), False)
         )
@@ -1210,7 +1209,7 @@ def _qf_union(
     for f in fields:
         idx = indexes[f]
         blocks = (
-            _blocks_for_terms(idx, terms) if blocks_of is None
+            idx.blocks_for_terms(terms) if blocks_of is None
             else blocks_of(f)
         )
         dec = _decode(blocks, idx.avgdl, cand)
@@ -1300,8 +1299,6 @@ def edismax_qf(
     mode: str = "auto",
     pool_target: int | None = None,
     full_cutover: int | None = None,
-    driver_meta_cap: int | None = None,
-    driver_cand_cap: int | None = None,
 ) -> DataFrame:
     """Multi-field edismax (the reference /browse handler's real shape:
     ``qf=title^10.0 author^2.0 text^0.5 ...``, mm=100%, NO tie param =>
@@ -1335,7 +1332,7 @@ def edismax_qf(
     through ``_qf_union``/``_qf_score``, so it is rank-identical by
     construction (exact rescore + completeness check with fallback);
     'auto' picks pruned above the postings-volume cutover. The
-    pool/cutover/cap knobs pass through to the engine (tests pin them to
+    pool/cutover knobs pass through to the engine (tests pin them to
     force branches)."""
     if not indexes or set(qf) - set(indexes):
         raise ValueError(
@@ -1380,14 +1377,11 @@ def edismax_qf(
 
     if mode == "full":
         return full()
-    from .wand import _restrict_to, block_max_topk  # cycle-free
+    from .wand import block_max_topk  # cycle-free
 
     def rescore(blocks_of, cand):
-        un = _restrict_to(
-            lambda ids: _qf_union(
-                indexes, fields, terms, qf, blocks_of=blocks_of, cand=ids
-            ),
-            cand,
+        un = _qf_union(
+            indexes, fields, terms, qf, blocks_of=blocks_of, cand=cand
         )
         scored = _qf_score(un, tie)
         return scored.filter(F.col("n_terms") >= mm_n) if mm_n > 0 else scored
@@ -1397,7 +1391,6 @@ def edismax_qf(
         terms, k, rescore=rescore, fallback=full, meta_index=meta_index,
         with_meta=with_meta, tie=float(tie),
         pool_target=pool_target, full_cutover=full_cutover,
-        driver_meta_cap=driver_meta_cap, driver_cand_cap=driver_cand_cap,
     )
 
 

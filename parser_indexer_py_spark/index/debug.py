@@ -24,7 +24,8 @@ Plan shape: one bounded ``search()`` for the top-k ids (k rows to the
 driver — the page being explained, same bound Solr has), then a second
 block scan decoding ONLY those candidates (pushed bucket/term filters,
 in-batch candidate drop), broadcast-joined to the k-row score page and
-the |terms|-row termstats. No full rescore, no unbounded state.
+the |terms|-row df/idf side (``index.term_stats``, a driver-held local
+relation). No full rescore, no unbounded state.
 """
 
 from __future__ import annotations
@@ -36,7 +37,6 @@ from pyspark.sql import functions as F
 from ..functions.analyzer import analyze_text
 from .search import (
     SCORE_SCHEMA,
-    _blocks_for_terms,
     _decode,
     local_frame,
     search,
@@ -72,9 +72,11 @@ def explain(index, query: str, k: int = 10) -> DataFrame:
         [(r["doc_id"], r["score"]) for r in rows],
         SCORE_SCHEMA,
     )
-    decoded = _decode(_blocks_for_terms(index, terms), index.avgdl, cand)
-    stats = index.termstats.filter(F.col("term").isin(terms)).select(
-        "term", "df", "idf"
+    decoded = _decode(index.blocks_for_terms(terms), index.avgdl, cand)
+    stats = local_frame(
+        hits.sparkSession,
+        [(t, df, idf) for t, (df, _, idf) in index.term_stats(terms).items()],
+        "term string, df long, idf double",
     )
     return (
         decoded.join(F.broadcast(stats), "term")

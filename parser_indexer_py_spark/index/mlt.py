@@ -11,7 +11,7 @@ maxQueryTerms (25) — and run them as a plain disjunctive BooleanQuery
 the source document itself.
 
 Split of responsibilities: term SELECTION is driver-side pure Python over
-ONE document's tokens plus a |terms|-row termstats point lookup (shared
+ONE document's tokens plus an ``index.term_stats`` point lookup (shared
 with the oracle — selection is plumbing); result SCORING runs through the
 engine's block-max pruned path (``wand.search_pruned``, the keyword
 strategy of the one block-max engine, whose completeness check guarantees
@@ -108,10 +108,7 @@ def interesting_terms(
     cand = sorted({t for t, c in Counter(tokens).items()
                    if c >= cfg["min_term_freq"]})
     dfs = {
-        r["term"]: int(r["df"])
-        for r in index.termstats.filter(F.col("term").isin(cand))
-        .select("term", "df")
-        .collect()
+        t: df for t, (df, _, _) in index.term_stats(cand).items()
     } if cand else {}
     return select_interesting(
         tokens,

@@ -157,8 +157,9 @@ class Index:
     def term_stats(self, terms: list[str]) -> dict:
         """``{term: (df, cf, idf)}`` for the ``terms`` present: one
         termstats point lookup (a MergedSegmentsView answers the same
-        call from its segments). The one lookup behind WAND's cutover,
-        conjunctive pruning and phrase idf."""
+        call from its segments). The one point lookup behind WAND's
+        cutover, conjunctive pruning, phrase idf, the spellcheck and
+        wordbreak dfs, MLT term selection and ``explain``."""
         rows = (
             self.termstats.filter(F.col("term").isin(list(terms)))
             .select("term", "df", "cf", "idf")
@@ -309,7 +310,7 @@ def _docs_with_any(index: "Index", terms: list[str]) -> DataFrame:
     only those terms' blocks)."""
     if not terms:
         return local_frame(index.spark, [], "doc_id long")
-    return _decode(_blocks_for_terms(index, terms)).distinct()
+    return _decode(index.blocks_for_terms(terms)).distinct()
 
 
 def _apply_boosts(decoded: DataFrame, terms: list[str], boost_of) -> DataFrame:
@@ -486,7 +487,7 @@ def phrase_scores(
     idf_sum = 0.0
     for t in tokens:
         idf_sum += stats[t]
-    blocks = _blocks_for_terms(index, terms)
+    blocks = index.blocks_for_terms(terms)
     # candidate pruning (lossless): a phrase doc must contain EVERY term,
     # so when the rarest term is much smaller than the rest, collect its
     # docs-only list (cheap decode — no positions/tf/dl; bounded by the
@@ -738,13 +739,6 @@ def allowed_docs(index: Index, role: str | None, filters: dict | None):
     return index.docmap.filter(cond).select("doc_id")
 
 
-def _blocks_for_terms(index: Index, terms: list[str]) -> DataFrame:
-    """The one source of a query's postings blocks: an Index filters its
-    postings; a MergedSegmentsView unions its segments' filtered scans
-    under driver-merged term statistics (streaming/merged.py)."""
-    return index.blocks_for_terms(terms)
-
-
 def search(
     index: Index,
     query: str,
@@ -757,8 +751,6 @@ def search(
     with_meta: bool = True,
     pool_target: int | None = None,
     full_cutover: int | None = None,
-    driver_meta_cap: int | None = None,
-    driver_cand_cap: int | None = None,
     synonyms: dict[str, list[str]] | None = None,
     with_excerpt: bool = False,
     phrase: bool = False,
@@ -859,19 +851,13 @@ def search(
     expanded = any(len(g) > 1 for g in groups) or len(terms) != len(groups)
     groups = groups if expanded else None
     if mode == "pruned":
-        from .wand import DRIVER_CAND_CAP, DRIVER_META_ROW_CAP, search_pruned
+        from .wand import search_pruned
 
         topk = search_pruned(
             index, terms, k, conjunctive=conjunctive, groups=groups,
             role=role, filters=filters,
             with_meta=with_meta, pool_target=pool_target,
             full_cutover=full_cutover,
-            driver_meta_cap=(
-                DRIVER_META_ROW_CAP if driver_meta_cap is None else driver_meta_cap
-            ),
-            driver_cand_cap=(
-                DRIVER_CAND_CAP if driver_cand_cap is None else driver_cand_cap
-            ),
             boosts=boosts, require=require, exclude=exclude,
             min_match=min_match,
             contain_all=contain_all, contain_any=contain_any,
@@ -934,7 +920,7 @@ def full_eval(
     separate doc-set decode or join is needed (a hot MUST term's require
     DataFrame would cost a full docs-only decode; this costs nothing
     beyond keeping ``cs`` through the aggregation)."""
-    blocks = _blocks_for_terms(index, terms)
+    blocks = index.blocks_for_terms(terms)
     # conjunctive rare-term pruning (lossless, same rule as the phrase
     # path): a doc lacking the rarest term can never reach
     # n_terms == |terms|, so when that term is selective its docs-only

@@ -220,13 +220,8 @@ def spellcheck(index: Index, query: str, **overrides) -> dict:
             nf = _hits_capped(index, tokens, int(mrs) + 1)
         if int(nf) > int(mrs):
             return empty
-    # one |checked|-row point lookup for dfs (termstats term predicate)
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in index.termstats.filter(F.col("term").isin(checked))
-        .select("term", "df")
-        .collect()
-    }
+    # one |checked|-row point lookup for dfs
+    dfs = {t: df for t, (df, _, _) in index.term_stats(checked).items()}
     max_df = cfg["max_query_frequency"] * index.n_docs
     active = [t for t in checked if dfs.get(t, 0) <= max_df]
     if not active:
@@ -403,12 +398,7 @@ def wordbreak(index: Index, query: str, *, min_part_len: int = 2) -> dict:
     pairs = list(zip(tokens, tokens[1:]))
     for a, b in pairs:
         cand.add(a + b)
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in index.termstats.filter(F.col("term").isin(sorted(cand)))
-        .select("term", "df")
-        .collect()
-    }
+    dfs = {t: df for t, (df, _, _) in index.term_stats(sorted(cand)).items()}
     breaks: dict[str, list[tuple[str, str, int]]] = {}
     for t in tokens:
         if dfs.get(t):  # in-vocabulary terms are not broken

@@ -39,14 +39,14 @@ Phase 1  (selection): take blocks in descending sbound order until the
          (with one field bound_t = r), and R = sum_t bound_t. A doc outside
          the candidate set has all its postings in pruned blocks, so its
          score is <= R.
-Phase 2  candidate docIDs from ONLY the selected blocks (O(pool) ids).
-         After a driver selection the driver already knows the selected
-         blocks and their posting count Σn: when Σn <= DRIVER_CAND_CAP it
-         collects their ``(n, docs_bin[, base])`` payload in one job and
-         decodes the ids itself (the block bound is a cheap proxy the
-         driver holds; phase 3 is the one exact pass that verifies it).
-         Only a distributed selection (or an over-cap Σn) decodes the
-         candidates in Spark, a docs-only decode plus a distinct.
+Phase 2  (driver): candidate docIDs from ONLY the selected blocks. Every
+         selection, driver or distributed, knows its posting count Σn:
+         when Σn <= DRIVER_CAND_CAP the driver collects the selected
+         blocks' ``(n, docs_bin[, base])`` payload in one job and decodes
+         the ids itself (the block bound is a cheap proxy the driver
+         holds; phase 3 is the one exact pass that verifies it). A larger
+         selection is answered by full evaluation: at that volume the
+         rescore touches about every block anyway.
 Phase 3  (Spark): ``rescore`` decodes the query terms' blocks again, keeping
          only candidate docs -> exact candidate scores -> the
          ``require``/``exclude`` doc-set joins -> top-k.
@@ -64,13 +64,13 @@ Pass 2   if the check fails, the k-th exact score theta from pass 1 is a
          construction (the batch analog of doc-at-a-time WAND's theta
          refinement). Economic guards route shapes that cannot win to full
          evaluation instead: selection > 50% of total postings (flat
-         corpora), candidates > ~10% of postings (CAND_FRAC_GUARD —
-         scattered-candidate rescores cost as much as full on any
-         architecture), and the per-candidate block-range nested loop is
-         skipped above BNL_CELL_CAP cells. Only via those guards (or pass 1
-         producing < k rows) does the call FALL BACK — either way the
-         pruned path can never return a different answer than the oracle
-         path.
+         corpora) or > DRIVER_CAND_CAP postings, candidates > ~10% of
+         postings (CAND_FRAC_GUARD — scattered-candidate rescores cost
+         as much as full on any architecture), and the per-candidate
+         block-range nested loop is skipped above BNL_CELL_CAP cells.
+         Only via those guards (or pass 1 producing < k rows) does the
+         call FALL BACK — either way the pruned path can never return a
+         different answer than the oracle path.
 
 Why this wins at scale: the shuffle/aggregation volume drops from "every
 posting of every query term" (hot terms: O(N) rows) to "candidate pool"
@@ -93,7 +93,6 @@ from .search import (
     META_SCHEMA,
     SCORE_SCHEMA,
     _block_docs,
-    _blocks_for_terms,
     _decode,
     clamp_k,
     empty_result,
@@ -130,15 +129,13 @@ def reset_prune_stats() -> dict:
     return PRUNE_STATS
 
 
-# Phase-2 candidate budget for the DRIVER handoff (sorted int64 numpy
-# array shipped into the phase-3 Arrow decoder — the fastest shape for
-# the in-decoder searchsorted membership filter; 1M ids = 8 MB, same
-# comfort bound as search.PHRASE_PRUNE_CAND_CAP). It also bounds the
-# postings whose doc-id payload a driver selection collects to decode
-# its candidates on the driver (a few bytes per posting). Beyond it the
-# candidate set STAYS A DATAFRAME end to end (round-3 verdict nit #3):
-# phase 3 then prunes blocks with the coarse [min, max] bound and
-# semi-joins candidates after decode, before the groupBy shuffle.
+# Phase-2 budget: the most postings a selection may hold. The driver
+# collects the selected blocks' doc-id payload (a few bytes per posting)
+# and hands phase 3 a sorted int64 id array (1M ids = 8 MB, the same
+# comfort bound as search.PHRASE_PRUNE_CAND_CAP). A larger selection is
+# answered by full evaluation (counted as a fallback), so no driver-side
+# object grows past this cap; the one measurement above it favours full
+# evaluation (see CAND_FRAC_GUARD).
 DRIVER_CAND_CAP = 1_000_000
 
 # Economic guards (round-5, measured at 6.5M docs on the skewed corpus):
@@ -221,18 +218,6 @@ def _residual_bound(r_tf: pd.Series, tie: float) -> float:
     return float((mx + tie * (sm - mx)).sum())
 
 
-def _restrict_to(decode, cand):
-    """``decode(ids)`` kept to the phase-3 candidates: a sorted id array
-    (driver handoff) filters inside the Arrow decoder; a candidate
-    DataFrame (distributed handoff) semi-joins after decode, before the
-    groupBy shuffle — which still shrinks to candidate volume. NO
-    broadcast hint there: a broadcast would collect the whole over-cap set
-    on the driver, the exact blowup that handoff exists to avoid."""
-    if isinstance(cand, np.ndarray):
-        return decode(cand)
-    return decode(None).join(cand, "doc_id", "left_semi")
-
-
 def block_max_topk(
     sources: list,
     terms: list[str],
@@ -247,16 +232,14 @@ def block_max_topk(
     exclude: DataFrame | None = None,
     pool_target: int | None = None,
     full_cutover: int | None = None,
-    driver_meta_cap: int | None = None,
-    driver_cand_cap: int | None = None,
 ) -> DataFrame:
     """The block-max engine (module docstring): ``sources`` is a list of
     ``(field, index, {term: bound scale})``; ``rescore(blocks_of, cand)``
     returns the candidates' exact ``(doc_id, score)`` DataFrame, where
     ``blocks_of(field)`` is that field's query-term block scan restricted
-    to blocks that can hold a candidate and ``cand`` is a sorted id array
-    or a candidate DataFrame (see :func:`_restrict_to`); ``fallback()`` is
-    the full evaluation.
+    to blocks that can hold a candidate and ``cand`` is the sorted int64
+    candidate id array (the Arrow decoder's membership filter);
+    ``fallback()`` is the full evaluation.
     ``require``/``exclude`` are score-neutral doc-set joins applied to the
     phase-3 scores ahead of the completeness check — a doc failing them
     can never be a result, so the joins are lossless.
@@ -264,17 +247,13 @@ def block_max_topk(
     ``pool_target`` overrides the candidate-pool size (tests use a tiny
     pool to force the completeness check to fail), ``full_cutover`` the
     postings-volume pruned/full switch (tests pin it to 0 to force the
-    pruned machinery on small corpora), ``driver_meta_cap`` /
-    ``driver_cand_cap`` the driver-vs-distributed selection and handoff
-    bounds. Seg-awareness is detected per field, so monolithic and
-    segmented (MergedSegmentsView) indexes can mix."""
+    pruned machinery on small corpora). DRIVER_META_ROW_CAP (driver vs
+    distributed selection) and DRIVER_CAND_CAP (phase 2 vs full
+    evaluation) are read per call. Seg-awareness is detected per field,
+    so monolithic and segmented (MergedSegmentsView) indexes can mix."""
     spark = meta_index.spark
     fields = [f for f, _, _ in sources]
     k = clamp_k(k, meta_index)
-    if driver_meta_cap is None:
-        driver_meta_cap = DRIVER_META_ROW_CAP
-    if driver_cand_cap is None:
-        driver_cand_cap = DRIVER_CAND_CAP
 
     def _fallback(counter: str = "fallback"):
         PRUNE_STATS[counter] += 1
@@ -306,7 +285,7 @@ def block_max_topk(
     # never reach these scans. A multi-segment view repeats block_id per
     # segment, so selection keys carry seg (term, block_id alone would
     # select a superset: harmless for correctness, wasteful at scale)
-    blocks = {f: _blocks_for_terms(idx, terms) for f, idx, _ in sources}
+    blocks = {f: idx.blocks_for_terms(terms) for f, idx, _ in sources}
     sbound = {f: _scaled_bound(scale) for f, _, scale in sources}
     bmeta = reduce(DataFrame.unionByName, [
         blocks[f].select(
@@ -341,28 +320,26 @@ def block_max_topk(
             int(chosen["n"].sum()),
         )
 
-    def _selected_n(t) -> int:
-        return int(
-            bmeta.filter(F.col("sbound") >= t).agg(F.sum("n").alias("s"))
-            .collect()[0]["s"] or 0
-        )
-
     def _dist_pick(t):
-        """(selected_blocks(field), R) for the distributed selection
-        sbound >= t; the driver sees only |terms| x |fields| maxima."""
-        rows = (
-            bmeta.filter(F.col("sbound") < t)
-            .groupBy("term", "field")
-            .agg(F.max("sbound").alias("m"))
-            .collect()
+        """(selected_blocks(field), R, Σn of the selection) for the
+        distributed selection sbound >= t: one aggregation, so the driver
+        sees |terms| x |fields| rows — each list's best pruned bound (null
+        when nothing of it was pruned) and its selected postings."""
+        sel = F.col("sbound") >= t
+        lists = pd.DataFrame(
+            bmeta.groupBy("term", "field")
+            .agg(
+                F.max(F.when(~sel, F.col("sbound"))).alias("m"),
+                F.sum(F.when(sel, F.col("n"))).alias("s"),
+            )
+            .collect(),
+            columns=["term", "field", "m", "s"],
         )
-        r_tf = pd.DataFrame(rows, columns=["term", "field", "m"]).set_index(
-            ["term", "field"]
-        )["m"]
+        r_tf = lists.dropna(subset=["m"]).set_index(["term", "field"])["m"]
         return (
             lambda f: blocks[f].filter(sbound[f] >= t),
             _residual_bound(r_tf, tie),
-            None,
+            int(lists["s"].fillna(0).sum()),
         )
 
     def _rescore(blocks_of, cand):
@@ -418,91 +395,34 @@ def block_max_topk(
         )
 
     def _evaluate(selected_blocks, R, sel_n):
-        """Phases 2-3 for ONE block selection; (top_rows, complete).
-        ``sel_n`` is the selection's posting count when the driver chose
-        it (None for a distributed selection)."""
+        """Phases 2-3 for ONE block selection of ``sel_n`` postings;
+        (top_rows, complete). Phase 2 runs on the driver: one collect of
+        the selected blocks' doc-id payload, decoded here by the same
+        _block_docs the Arrow decoders use — no decode job, no shuffle.
+        Over DRIVER_CAND_CAP postings the call falls back."""
+        if sel_n > DRIVER_CAND_CAP:
+            raise _TooManyCandidates(sel_n)
         selected = [
             b for b in (selected_blocks(f) for f in fields) if b is not None
         ]
         if not selected:
             return None, False
-        guard_cap = int(max(k * 64, CAND_FRAC_GUARD * total_postings))
-        if sel_n is not None and sel_n <= driver_cand_cap:
-            # phase 2 ON THE DRIVER: the selection is known and small, so
-            # one collect of its blocks' doc-id payload (<= driver_cand_cap
-            # postings, a few bytes each), decoded here by the same
-            # _block_docs the Arrow decoders use — no decode job, no
-            # distinct shuffle
-            payload = reduce(DataFrame.unionByName, [
-                b.select(
-                    "n", "docs_bin",
-                    (F.col("base") if "base" in b.columns else F.lit(0))
-                    .cast("long").alias("base"),
-                )
-                for b in selected
-            ]).toPandas()
-            if not len(payload):
-                return None, False
-            ids = np.unique(_block_docs(payload))
-            if len(ids) > guard_cap:
-                raise _TooManyCandidates(len(ids))
-            return _finish(_driver_handoff(ids), R)
-        # phase 2 in Spark: candidate docIDs from the selected blocks
-        cand_set = reduce(
-            DataFrame.unionByName, [_decode(b) for b in selected]
-        ).distinct()
-        if guard_cap <= driver_cand_cap:
-            # FUSED fast path: the economic guard already bounds any
-            # survivable candidate set at guard_cap (<= the driver handoff
-            # cap), so ONE bounded limit+toPandas both materializes the set
-            # and decides the guard — replacing the persist + count/bounds
-            # agg job + separate toPandas job (two driver round-trips and a
-            # cache write) of the general path below. Ids are 8 B each:
-            # the fetch is <= ~8 MB, the established driver comfort bound.
-            pdf = cand_set.limit(guard_cap + 1).toPandas()
-            if not len(pdf):
-                return None, False
-            if len(pdf) > guard_cap:
-                raise _TooManyCandidates(len(pdf))
-            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            return _finish(_driver_handoff(np.sort(ids)), R)
-        # general path: the guard bound exceeds the driver handoff cap
-        # (total_postings > 10 * driver_cand_cap), so the candidate set
-        # must stay distributed until its size is known
-        cand_set = cand_set.persist()
-        try:
-            cstats = cand_set.agg(
-                F.count("*").alias("n"),
-                F.min("doc_id").alias("lo"),
-                F.max("doc_id").alias("hi"),
-            ).collect()[0]
-            n_cand = int(cstats["n"] or 0)
-            if n_cand == 0:
-                return None, False
-            if n_cand > guard_cap:
-                raise _TooManyCandidates(n_cand)
-            if n_cand <= driver_cand_cap:
-                ids = cand_set.toPandas()["doc_id"].to_numpy(dtype=np.int64)
-                scored = _driver_handoff(np.sort(ids))
-            else:
-                # DISTRIBUTED handoff (no driver candidate array, no
-                # collect between phases): the nested-loop range join
-                # would cost O(meta_rows x n_cand), and huge candidate sets
-                # hit ~every block anyway (same measurement as the phrase
-                # path's PHRASE_BLOCK_JOIN_CAP), so keep only the coarse
-                # bound
-                rng = (F.col("doc_max") >= int(cstats["lo"])) & (
-                    F.col("doc_min") <= int(cstats["hi"])
-                )
-                scored = _rescore(lambda f: blocks[f].filter(rng), cand_set)
-            # _finish collects inside this try block, while the persisted
-            # candidate set (referenced by the distributed-handoff plan)
-            # is still materialized
-            return _finish(scored, R)
-        finally:
-            cand_set.unpersist()
+        payload = reduce(DataFrame.unionByName, [
+            b.select(
+                "n", "docs_bin",
+                (F.col("base") if "base" in b.columns else F.lit(0))
+                .cast("long").alias("base"),
+            )
+            for b in selected
+        ]).toPandas()
+        if not len(payload):
+            return None, False
+        ids = np.unique(_block_docs(payload))
+        if len(ids) > int(max(k * 64, CAND_FRAC_GUARD * total_postings)):
+            raise _TooManyCandidates(len(ids))
+        return _finish(_driver_handoff(ids), R)
 
-    driver_selection = est_meta_rows <= driver_meta_cap
+    driver_selection = est_meta_rows <= DRIVER_META_ROW_CAP
     if driver_selection:
         # ---- phase 1a: exact block selection on the driver ----------------
         meta = bmeta.toPandas()
@@ -541,12 +461,12 @@ def block_max_topk(
         frac = min(1.0, pool_target / float(total_postings))
         err = max(1e-6, min(0.01, frac / 2.0))
         tau = bmeta.stat.approxQuantile("sbound", [max(0.0, 1.0 - frac)], err)[0]
+        pick = _dist_pick(tau)
         # volume guard: if ties at tau (or quantile error) still selected
         # far more than the pool target, pruning wouldn't pay — evaluate
         # fully rather than collect an oversized candidate set
-        if _selected_n(tau) > max(50 * pool_target, 100_000):
+        if pick[2] > max(50 * pool_target, 100_000):
             return _fallback()
-        pick = _dist_pick(tau)
 
     try:
         top, complete = _evaluate(*pick)
@@ -586,9 +506,9 @@ def block_max_topk(
             if t2 >= tau:
                 # same tau => same selection => same failed check
                 return _fallback()
-            if _selected_n(t2) > 0.5 * total_postings:
-                return _fallback()
             pick = _dist_pick(t2)
+            if pick[2] > 0.5 * total_postings:
+                return _fallback()
         try:
             top, complete = _evaluate(*pick)
         except _TooManyCandidates:
@@ -628,8 +548,6 @@ def search_pruned(
     with_meta: bool = True,
     pool_target: int | None = None,
     full_cutover: int | None = None,
-    driver_meta_cap: int = DRIVER_META_ROW_CAP,
-    driver_cand_cap: int = DRIVER_CAND_CAP,
     boosts: dict | None = None,
     require: DataFrame | None = None,
     exclude: DataFrame | None = None,
@@ -689,10 +607,9 @@ def search_pruned(
         return float(boosts.get(t, 1.0)) if boosts else 1.0
 
     def rescore(blocks_of, cand):
-        decoded = _restrict_to(
-            lambda ids: _decode(blocks_of(""), index.avgdl, ids), cand
+        decoded = _apply_boosts(
+            _decode(blocks_of(""), index.avgdl, cand), terms, boost_of
         )
-        decoded = _apply_boosts(decoded, terms, boost_of)
         need_cs = bool(contain_all or contain_any)
         scored = _score_decoded(decoded, keep_cs=need_cs)
         if need_cs:
@@ -716,5 +633,4 @@ def search_pruned(
         rescore=rescore, fallback=fallback, meta_index=index,
         with_meta=with_meta, require=require, exclude=exclude,
         pool_target=pool_target, full_cutover=full_cutover,
-        driver_meta_cap=driver_meta_cap, driver_cand_cap=driver_cand_cap,
     )

@@ -30,7 +30,7 @@ Global correctness rules (everything a query consumes):
   term set, so a query's cutover, block scan, phrase idf and conjunctive
   pruning share one lookup.
 - query blocks (:meth:`MergedSegmentsView.blocks_for_terms`, the view's
-  half of ``search._blocks_for_terms``): the union of each segment's
+  twin of :meth:`Index.blocks_for_terms`): the union of each segment's
   bucket- and term-filtered block scan, carrying ``base`` (docID offset,
   applied inside the Arrow decoders) and ``seg`` (selection key for the
   pruned path), ``doc_min``/``doc_max`` offset to global ids, per-term

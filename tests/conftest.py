@@ -37,3 +37,28 @@ def job_count(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
     return run
+
+
+@pytest.fixture
+def forced_run(job_count, monkeypatch):
+    """``forced_run(fn, **caps)`` builds and collects ``fn()`` (a
+    DataFrame) under a fresh job group, with each named ``index.wand``
+    cap forced for the call (``DRIVER_META_ROW_CAP=0`` moves block
+    selection into Spark, ``DRIVER_CAND_CAP=0`` sends every selection to
+    full evaluation). Returns ``(jobs, rows, moved)``: the Spark jobs the
+    call launched, its rows as tuples, and the set of ``PRUNE_STATS``
+    paths (pass1, pass2, fallback, cutover) it moved."""
+    from parser_indexer_py_spark.index import wand
+
+    def run(fn, **caps):
+        with monkeypatch.context() as m:
+            for name, value in caps.items():
+                m.setattr(wand, name, value)
+            before = dict(wand.PRUNE_STATS)
+            n_jobs, rows = job_count(
+                lambda: [tuple(r) for r in fn().collect()]
+            )
+        moved = {p for p, n in wand.PRUNE_STATS.items() if n != before[p]}
+        return n_jobs, rows, moved
+
+    return run

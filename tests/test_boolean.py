@@ -1127,33 +1127,33 @@ def test_fielded_scoring_clause(spark, tmp_path_factory):
         boolean_search(idx, f"title:{tt}", k=5)
 
 
-# Cap settings of the pruned edismax_qf matrix, with the Spark jobs one
-# two-field call may launch for the hot-term and the mid-df query: the
-# counts measured by the test below on the code before keyword search
-# and DisMax shared one block-max engine (job counts do not depend on the
-# host, so an added driver round-trip fails here).
+# Settings of the pruned edismax_qf matrix — call keywords, forced
+# index.wand caps — with the Spark jobs one two-field call may launch for
+# the hot-term and the mid-df query: the counts the test below measures
+# (job counts do not depend on the host, so an added driver round-trip
+# fails here). DRIVER_CAND_CAP=0 puts every selection over the phase-2
+# cap, so those settings are answered by full evaluation.
 QF_PRUNED_SETTINGS = {
-    "driver": ({}, {"hot": 13, "mid": 15}),  # phase 1a + driver handoff
-    "tiny_pool": ({"pool_target": 2}, {"hot": 13, "mid": 15}),
-    "all_blocks": ({"pool_target": 10**9}, {"hot": 13, "mid": 15}),
+    "driver": ({}, {}, {"hot": 7, "mid": 8}),
+    "tiny_pool": ({"pool_target": 2}, {}, {"hot": 7, "mid": 8}),
+    "all_blocks": ({"pool_target": 10**9}, {}, {"hot": 7, "mid": 8}),
     "distributed_selection": (
-        {"driver_meta_cap": 0}, {"hot": 18, "mid": 19},
+        {}, {"DRIVER_META_ROW_CAP": 0}, {"hot": 10, "mid": 11},
     ),
-    "distributed_handoff": (
-        {"driver_cand_cap": 0}, {"hot": 15, "mid": 18},
-    ),
-    "distributed_both": (
-        {"driver_meta_cap": 0, "driver_cand_cap": 0}, {"hot": 20, "mid": 22},
+    "over_cap": ({}, {"DRIVER_CAND_CAP": 0}, {"hot": 6, "mid": 6}),
+    "distributed_over_cap": (
+        {}, {"DRIVER_META_ROW_CAP": 0, "DRIVER_CAND_CAP": 0},
+        {"hot": 9, "mid": 9},
     ),
 }
 
 
-def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory, job_count):
+def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory, forced_run):
     """Round-5: block-max WAND over DisjunctionMax (wand.block_max_topk
     with one block source per qf field). Every branch combination —
-    driver/distributed phase 1, driver/distributed candidate handoff,
-    tiny pool (the completeness check), all-blocks pool (R == 0,
-    certifies the pruned phase 3 itself) — returns EXACTLY the full
+    driver/distributed phase 1, a selection over the phase-2 cap (full
+    evaluation), tiny pool (the completeness check), all-blocks pool
+    (R == 0, certifies the pruned phase 3 itself) — returns EXACTLY the full
     path's (doc_id, score) rows within its Spark job budget: phase 3
     rescoring runs the same _qf_union/_qf_score expressions, so candidate
     scores are bit-identical, and the completeness check makes pruning
@@ -1164,13 +1164,6 @@ def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory, job_count):
     import pyspark.sql.functions as F
 
     from parser_indexer_py_spark.index.boolean import edismax_qf
-    from parser_indexer_py_spark.index.wand import PRUNE_STATS
-
-    def answered_by(run):
-        before = dict(PRUNE_STATS)
-        n_jobs, rows = job_count(lambda: _rows(run()))
-        moved = {p for p in PRUNE_STATS if PRUNE_STATS[p] != before[p]}
-        return rows, moved, n_jobs
 
     base = generate_transcripts(spark, 60, partitions=3)
     title = F.array_join(F.slice(F.split(F.col("text"), " "), 1, 2), " ")
@@ -1202,12 +1195,13 @@ def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory, job_count):
             )
         )
         assert full  # non-vacuous
-        for name, (kw, budget) in QF_PRUNED_SETTINGS.items():
-            got, moved, n_jobs = answered_by(
+        for name, (kw, caps, budget) in QF_PRUNED_SETTINGS.items():
+            n_jobs, got, moved = forced_run(
                 lambda: edismax_qf(
                     idxs, q, qf, k=5, tie=tie, mm=mm, mode="pruned",
                     full_cutover=0, with_meta=False, **kw
-                )
+                ),
+                **caps,
             )
             assert got == full, (qname, tie, mm, name)
             assert n_jobs <= budget[qname], (qname, tie, name, n_jobs)
@@ -1217,20 +1211,22 @@ def test_edismax_qf_pruned_equals_full(spark, tmp_path_factory, job_count):
     # keyword search is the one-field case of the same engine
     text = idxs["text"]
     for q in queries.values():
-        for name, (kw, _) in QF_PRUNED_SETTINGS.items():
-            dismax = answered_by(
+        for name, (kw, caps, _) in QF_PRUNED_SETTINGS.items():
+            dismax = forced_run(
                 lambda: edismax_qf(
                     {"text": text}, q, {"text": 1.0}, k=5, tie=0.0, mm=0,
                     mode="pruned", full_cutover=0, with_meta=False, **kw
-                )
+                ),
+                **caps,
             )
-            keyword = answered_by(
+            keyword = forced_run(
                 lambda: search(
                     text, q, k=5, mode="pruned", full_cutover=0,
                     with_meta=False, **kw
-                )
+                ),
+                **caps,
             )
-            assert dismax[:2] == keyword[:2], (q, name)
+            assert dismax[1:] == keyword[1:], (q, name)
     # auto mode on a tiny corpus rides the cutover to full — same rows
     q = queries["hot"]
     assert _rows(

@@ -243,7 +243,7 @@ def test_merged_view_requires_uniform_buckets(spark, tmp_path_factory):
         MergedSegmentsView(s)
 
 
-def test_edismax_qf_over_segments(spark, tmp_path_factory):
+def test_edismax_qf_over_segments(spark, tmp_path_factory, forced_run):
     """Round-5 (verdict task 6): multi-field edismax over PER-FIELD
     MergedSegmentsView roots equals the monolithic two-field answer, in
     full AND block-max pruned modes (seg-aware selection keys resolved
@@ -288,21 +288,19 @@ def test_edismax_qf_over_segments(spark, tmp_path_factory):
         )
     )
     assert want
-    for mode, kw in [
-        ("full", {}),
-        ("pruned", {"full_cutover": 0}),
-        ("pruned", {"full_cutover": 0, "pool_target": 2}),
-        ("pruned", {"full_cutover": 0, "driver_meta_cap": 0}),
+    for mode, kw, caps in [
+        ("full", {}, {}),
+        ("pruned", {"full_cutover": 0}, {}),
+        ("pruned", {"full_cutover": 0, "pool_target": 2}, {}),
+        ("pruned", {"full_cutover": 0}, {"DRIVER_META_ROW_CAP": 0}),
     ]:
-        got = sorted(
-            map(
-                tuple,
-                edismax_qf(views, q, qf, k=10, tie=0.1, mm=0, mode=mode, **kw)
-                .select("conv_id", "turn_idx", "score")
-                .collect(),
-            )
+        _, got, _ = forced_run(
+            lambda: edismax_qf(
+                views, q, qf, k=10, tie=0.1, mm=0, mode=mode, **kw
+            ).select("conv_id", "turn_idx", "score"),
+            **caps,
         )
-        assert got == want, (mode, kw)
+        assert sorted(got) == want, (mode, kw, caps)
 
 
 def test_compact_tiered_races_appends(spark, tmp_path_factory):

@@ -96,7 +96,8 @@ def test_fuzz_segmented_equals_batch(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("seed", [11, 23])
-def test_fuzz_engine_matches_oracle(spark, tmp_path_factory, seed):
+def test_fuzz_engine_matches_oracle(spark, tmp_path_factory, forced_run,
+                                    seed):
     pdf = _random_corpus(seed, 120)
     out = str(tmp_path_factory.mktemp(f"fuzz{seed}"))
     df = spark.createDataFrame(pdf)
@@ -108,19 +109,22 @@ def test_fuzz_engine_matches_oracle(spark, tmp_path_factory, seed):
     for q in QUERIES:
         for conjunctive in (False, True):
             want = oracle.search(q, k=10, conjunctive=conjunctive)
-            for mode_kw in (
-                {"mode": "full"},
-                {"mode": "pruned", "full_cutover": 0},
-                {"mode": "pruned", "full_cutover": 0, "driver_meta_cap": 0},
+            for mode_kw, caps in (
+                ({"mode": "full"}, {}),
+                ({"mode": "pruned", "full_cutover": 0}, {}),
+                (
+                    {"mode": "pruned", "full_cutover": 0},
+                    {"DRIVER_META_ROW_CAP": 0},
+                ),
             ):
-                got = [
-                    (r["doc_id"], r["score"])
-                    for r in search(
+                _, got, _ = forced_run(
+                    lambda: search(
                         idx, q, k=10, conjunctive=conjunctive,
                         with_meta=False, **mode_kw
-                    ).collect()
-                ]
-                assert got == want, (seed, q, conjunctive, mode_kw)
+                    ),
+                    **caps,
+                )
+                assert got == want, (seed, q, conjunctive, mode_kw, caps)
         # role-filtered
         want_r = oracle.search(q, k=10, role="user")
         got_r = [

@@ -291,39 +291,37 @@ def test_pruned_two_pass_on_topical_corpus(spark, tmp_path_factory):
     assert PRUNE_STATS["pass1"] + PRUNE_STATS["pass2"] == 1, PRUNE_STATS
 
 
-def test_pruned_distributed_selection_rank_identical(index, oracle):
-    """driver_meta_cap=0 forces the DISTRIBUTED block-selection branch
+def test_pruned_distributed_selection_rank_identical(
+    index, oracle, forced_run
+):
+    """DRIVER_META_ROW_CAP=0 forces the DISTRIBUTED block-selection branch
     (quantile-approximated tau, O(1) driver rows — VERDICT r1 #2): results
     must still match the oracle exactly (the completeness check converts
     any tau approximation error into a full-evaluation fallback)."""
     for name, q in _queries(oracle).items():
-        want = oracle.search(q, k=10)
-        got = [
-            (r["doc_id"], r["score"])
-            for r in search(
-                index, q, k=10, mode="pruned", full_cutover=0,
-                driver_meta_cap=0,
-            ).collect()
-        ]
-        assert got == want, f"{name} ({q!r})"
+        _, got, _ = forced_run(
+            lambda: search(index, q, k=10, mode="pruned", full_cutover=0),
+            DRIVER_META_ROW_CAP=0,
+        )
+        assert [r[:2] for r in got] == oracle.search(q, k=10), name
 
 
-def test_pruned_distributed_candidates_rank_identical(index, oracle):
-    """Round-4: driver_cand_cap=0 forces the DISTRIBUTED phase-2 -> 3
-    candidate handoff (the candidate set stays a DataFrame; no collect
-    between phases — round-3 verdict nit #3): results must still match
-    the oracle exactly, with and without role filters."""
+def test_pruned_over_cap_rank_identical(index, oracle, forced_run):
+    """DRIVER_CAND_CAP=0 puts every selection over the phase-2 cap: the
+    call is answered by full evaluation (the ``fallback`` path), with the
+    oracle's rows with and without role filters."""
     for name, q in _queries(oracle).items():
         for role in (None, "user"):
-            want = oracle.search(q, k=10, role=role)
-            got = [
-                (r["doc_id"], r["score"])
-                for r in search(
+            _, got, moved = forced_run(
+                lambda: search(
                     index, q, k=10, mode="pruned", full_cutover=0,
-                    driver_cand_cap=0, role=role,
-                ).collect()
-            ]
-            assert got == want, f"{name} ({q!r}) role={role}"
+                    role=role,
+                ),
+                DRIVER_CAND_CAP=0,
+            )
+            want = oracle.search(q, k=10, role=role)
+            assert [r[:2] for r in got] == want, (name, role)
+            assert moved == {"fallback"}, (name, role, moved)
 
 
 def test_pruned_adaptive_cutover_routes_small_to_full(index, oracle):
@@ -367,37 +365,36 @@ def test_pruned_fallback_path(index, oracle):
 
 # Spark jobs one pruned call may launch on each forced path, per strategy:
 # the counts this test measures, with the final top-k handed back as a
-# LocalRelation (its collect runs no job; the fallback ends in full_eval,
+# LocalRelation (its collect runs no job; a fallback ends in full_eval,
 # whose top-k is a Spark plan). Job counts do not depend on the host, so
 # an added driver round-trip on any path fails here. with_meta may add
 # one job: the stored-field fetch by docID.
 @pytest.mark.parametrize(
-    "knobs, q_name, answered, budget",
+    "knobs, caps, q_name, answered, budget",
     [
-        ({}, "q_single", "pass1", {"keyword": 6, "dismax": 7}),
+        ({}, {}, "q_single", "pass1", {"keyword": 6, "dismax": 7}),
         (
-            {"driver_meta_cap": 0}, "q_single", "pass1",
-            {"keyword": 11, "dismax": 12},
-        ),
-        (
-            {"driver_cand_cap": 0}, "q_single", "pass1",
+            {}, {"DRIVER_META_ROW_CAP": 0}, "q_single", "pass1",
             {"keyword": 9, "dismax": 10},
         ),
         (
-            {"pool_target": 1}, "q_multi_or", "fallback",
+            {}, {"DRIVER_CAND_CAP": 0}, "q_single", "fallback",
+            {"keyword": 4, "dismax": 5},
+        ),
+        (
+            {"pool_target": 1}, {}, "q_multi_or", "fallback",
             {"keyword": 8, "dismax": 10},
         ),
     ],
-    ids=["driver", "distributed_selection", "distributed_handoff", "fallback"],
+    ids=["driver", "distributed_selection", "over_cap", "fallback"],
 )
-def test_pruned_job_budget(index, oracle, job_count, knobs, q_name, answered,
-                           budget):
+def test_pruned_job_budget(index, oracle, forced_run, knobs, caps, q_name,
+                           answered, budget):
     """Keyword search and single-field DisMax (qf text^1, tie 0, mm 0 —
     keyword search IS one-field DisMax) on each forced path, with and
     without stored fields: the oracle's rows, the named path, and no more
     Spark jobs than the budget."""
     from parser_indexer_py_spark.index.boolean import edismax_qf
-    from parser_indexer_py_spark.index.wand import PRUNE_STATS
 
     q = _queries(oracle)[q_name]
     runs = {
@@ -412,43 +409,39 @@ def test_pruned_job_budget(index, oracle, job_count, knobs, q_name, answered,
     }
     for strategy, run in runs.items():
         for with_meta in (False, True):
-            before = dict(PRUNE_STATS)
-            n_jobs, rows = job_count(
-                lambda: [tuple(r) for r in run(with_meta).collect()]
-            )
+            n_jobs, rows, moved = forced_run(lambda: run(with_meta), **caps)
             assert [r[:2] for r in rows] == oracle.search(q, k=10), strategy
-            moved = {p for p in PRUNE_STATS if PRUNE_STATS[p] != before[p]}
             assert moved == {answered}, (strategy, moved)
             assert n_jobs <= budget[strategy] + with_meta, (
                 strategy, with_meta, n_jobs,
             )
 
 
-def test_driver_side_empties_launch_no_job(index, job_count):
+def test_driver_side_empties_launch_no_job(index, forced_run):
     """Results the driver already knows are empty — a query that analyzes
     to no terms, an OOV pruned query answered before any block is read —
-    come back as an empty LocalRelation: collecting launches no Spark job,
-    and the columns and types are the with_meta schema contract."""
+    come back as an empty LocalRelation: the call launches no Spark job
+    beyond the OOV query's term-stats lookup, no pruning path moves (it
+    was answered by the engine's empty result, not by a cutover or
+    fallback to full evaluation), and the columns and types are the
+    with_meta schema contract."""
     from parser_indexer_py_spark.index.search import META_SCHEMA, SCORE_SCHEMA
-    from parser_indexer_py_spark.index.wand import PRUNE_STATS
 
     spark = index.spark
     for with_meta, schema in ((True, META_SCHEMA), (False, SCORE_SCHEMA)):
         want = spark.createDataFrame([], schema).schema
-        before = dict(PRUNE_STATS)
-        for df in (
-            search(index, "!!! ...", k=10, with_meta=with_meta),
-            search(
-                index, "zzzznotaterm", k=10, mode="pruned", full_cutover=0,
-                with_meta=with_meta,
+        for make, stats_jobs in (
+            (lambda: search(index, "!!! ...", k=10, with_meta=with_meta), 0),
+            (
+                lambda: search(
+                    index, "zzzznotaterm", k=10, mode="pruned",
+                    full_cutover=0, with_meta=with_meta,
+                ),
+                1,
             ),
         ):
-            n_jobs, rows = job_count(df.collect)
-            assert (n_jobs, rows) == (0, [])
-            assert df.schema == want
-        # the pruned call was answered by the engine's empty result, not
-        # by a cutover or fallback to full evaluation
-        assert PRUNE_STATS == before
+            assert forced_run(make) == (stats_jobs, [], set())
+            assert make().schema == want
 
 
 def test_unbounded_k_returns_every_match(index, oracle):

@@ -9,7 +9,9 @@ stats and one delete state per view.
   (no groupBy, no shuffle join), and the pruned engine's phase 2 runs on
   the driver;
 - a view lists each segment's tombstones once: a delete landing after it
-  was built does not change its answers, the next view sees it.
+  was built does not change its answers, the next view sees it;
+- point term lookups (MoreLikeThis, explain, wordbreak) over a view read
+  only their own terms' stats, never the merged vocabulary.
 """
 
 import types
@@ -30,7 +32,6 @@ from parser_indexer_py_spark.index.build import (
 from parser_indexer_py_spark.index.oracle import BM25Oracle
 from parser_indexer_py_spark.index.search import load_index, search
 from parser_indexer_py_spark.index.update import delete_docs
-from parser_indexer_py_spark.index.wand import PRUNE_STATS
 from parser_indexer_py_spark.streaming.incremental import (
     SegmentedIndex,
     search_segments_df,
@@ -149,7 +150,7 @@ def test_open_and_first_query_infer_no_schema(spark, seg):
         assert not [n for n in names if n.startswith("parquet at")], names
 
 
-def test_merged_query_job_budget(spark, seg, oracle):
+def test_merged_query_job_budget(spark, seg, oracle, forced_run):
     """A full query over one or two segments costs as many Spark jobs as
     one over a single index (3: the stats lookup, the decode/fold shuffle
     and the top-k), and pruning pass 1 over two segments at most 6 —
@@ -162,12 +163,10 @@ def test_merged_query_job_budget(spark, seg, oracle):
         )
         assert n_jobs <= 3, (len(segs.commits()), n_jobs)
     assert rows == want
-    before = dict(PRUNE_STATS)
-    n_jobs, _, rows = _jobs(
-        spark, lambda: _rows(search_segments_df(seg, q, k=10, **PRUNED))
+    n_jobs, rows, moved = forced_run(
+        lambda: search_segments_df(seg, q, k=10, **PRUNED)
     )
-    assert rows == want
-    assert {p for p in PRUNE_STATS if PRUNE_STATS[p] != before[p]} == {"pass1"}
+    assert ([r[:2] for r in rows], moved) == (want, {"pass1"})
     assert n_jobs <= 6, n_jobs
 
 
@@ -204,17 +203,17 @@ def seg_del(spark, tmp_path_factory, oracle):
 
 
 @pytest.mark.parametrize(
-    "knobs, q_name, answered",
+    "knobs, caps, q_name, answered",
     [
-        ({}, "pair", "pass1"),
-        ({"driver_meta_cap": 0}, "pair", "pass1"),
-        ({"driver_cand_cap": 0}, "pair", "pass1"),
-        ({"pool_target": 1}, "multi", "fallback"),
+        ({}, {}, "pair", "pass1"),
+        ({}, {"DRIVER_META_ROW_CAP": 0}, "pair", "pass1"),
+        ({}, {"DRIVER_CAND_CAP": 0}, "pair", "fallback"),
+        ({"pool_target": 1}, {}, "multi", "fallback"),
     ],
-    ids=["driver", "distributed_selection", "distributed_handoff", "fallback"],
+    ids=["driver", "distributed_selection", "over_cap", "fallback"],
 )
 def test_forced_paths_on_view_with_tombstone(
-    seg_del, oracle, knobs, q_name, answered
+    seg_del, oracle, forced_run, knobs, caps, q_name, answered
 ):
     """Every forced branch of the pruned engine over a two-segment view
     with deleted docs: the oracle's rows minus the deleted docs, scores
@@ -222,10 +221,10 @@ def test_forced_paths_on_view_with_tombstone(
     s, victims = seg_del
     q = _queries(oracle)[q_name]
     want = [r for r in oracle.search(q, k=20) if r[0] not in victims][:10]
-    before = dict(PRUNE_STATS)
-    got = _rows(search_segments_df(s, q, k=10, **PRUNED, **knobs))
-    assert got == want
-    assert {p for p in PRUNE_STATS if PRUNE_STATS[p] != before[p]} == {answered}
+    _, got, moved = forced_run(
+        lambda: search_segments_df(s, q, k=10, **PRUNED, **knobs), **caps
+    )
+    assert ([r[:2] for r in got], moved) == (want, {answered})
     assert _rows(search_segments_df(s, q, k=10)) == want
 
 
@@ -247,3 +246,42 @@ def test_view_keeps_its_delete_state(spark, seg_del, oracle):
         after = _rows(search_segments_df(s, q, k=20, **kw))
         assert late not in {d for d, _ in after}
         assert after[:9] == [r for r in before[m] if r[0] != late][:9]
+
+
+def test_term_lookups_leave_vocabulary_unmerged(
+    spark, seg, oracle, tmp_path_factory
+):
+    """MoreLikeThis, ``explain`` and wordbreak over a two-segment view
+    look up only their own terms (``index.term_stats``): each answer
+    equals a monolithic build of the same corpus, and the view's merged
+    vocabulary (the union + groupBy behind ``view.termstats``) is never
+    built."""
+    from parser_indexer_py_spark.index.build import build_index
+    from parser_indexer_py_spark.index.debug import explain
+    from parser_indexer_py_spark.index.mlt import more_like_this
+    from parser_indexer_py_spark.index.spell import wordbreak
+
+    out = str(tmp_path_factory.mktemp("mono"))
+    build_index(
+        spark,
+        generate_transcripts(spark, N_CONVS, partitions=2, topical=TOPICAL),
+        out,
+    )
+    mono = load_index(spark, out)
+    view = MergedSegmentsView(seg)
+    q = _query(oracle)
+    d = next(d for d in sorted(oracle.docs) if oracle.more_like_this(d))
+    a, b = q.split()
+
+    def answers(index):
+        return (
+            [tuple(r) for r in more_like_this(index, d, with_meta=False)
+             .collect()],
+            [tuple(r) for r in explain(index, q, k=10).collect()],
+            wordbreak(index, f"{a}{b} {a[:2]} {a[2:]}"),
+        )
+
+    got = answers(view)
+    assert got == answers(mono)
+    assert got[0] and got[1] and got[2]["breaks"] and got[2]["combines"]
+    assert view._termstats_df is None

@@ -76,12 +76,12 @@ def test_search_plan_prunes_buckets(spark, tmp_path):
     bucket partitions (partition pruning) and push the term predicate."""
     from parser_indexer_py_spark.datagen import generate_transcripts
     from parser_indexer_py_spark.index.build import build_index, term_bucket
-    from parser_indexer_py_spark.index.search import _blocks_for_terms, load_index
+    from parser_indexer_py_spark.index.search import load_index
 
     out = str(tmp_path / "idx")
     build_index(spark, generate_transcripts(spark, 30), out, n_chunks=1)
     idx = load_index(spark, out)
-    blocks = _blocks_for_terms(idx, ["bace"])
+    blocks = idx.blocks_for_terms(["bace"])
     p = plan_string(blocks)
     assert "PushedFilters" in p and "term" in p
     # partition pruning: bucket filter present in partition filters
